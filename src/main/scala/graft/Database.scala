@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.types.DataType
 
 import graft.core._
@@ -168,14 +168,15 @@ final class Database(val spark: SparkSession, root: String,
   }
 
   /** D13: `update` — keyed overwrite; returns the matched-row count
-    * (the reference returns `rowcount`, main.py:268). */
+    * (the reference returns `rowcount`, main.py:268), counted by the
+    * merge write's own pass over the target. */
   def update(tableName: String, data: DataFrame, on: Seq[String]): Long = {
     val (st, tbl) = resolve(tableName)
     val target = st.read(tbl)
-    val n = Mutations.updateRowCount(target, data, on)
-    st.write(tbl,
-      Ddl.preserveMetadata(Mutations.update(target, data, on), target.schema))
-    n
+    val matched = Observation()
+    st.write(tbl, Ddl.preserveMetadata(
+      Mutations.update(target, data, on, matched), target.schema))
+    Mutations.matchedRows(matched)
   }
 
   /** D14: `delete` — predicate delete; no predicate ⇒ full delete. */

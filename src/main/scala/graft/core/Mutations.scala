@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -94,10 +94,36 @@ object Mutations {
     * matching target rows' non-key columns with EXACTLY the provided
     * values (plain SET — nulls overwrite too, unlike upsert's coalesce).
     * Unmatched change rows are ignored (UPDATE matches nothing). */
-  def update(target: DataFrame, changes: DataFrame, on: Seq[String]): DataFrame = {
+  def update(target: DataFrame, changes: DataFrame, on: Seq[String]): DataFrame =
+    updateJoin(target, changes, on, None)
+
+  /** [[update]] whose own pass also counts the matched target rows (the
+    * reference returns `result.rowcount`, main.py:268) into `matched`:
+    * once the returned frame's first action has run, [[matchedRows]]
+    * reads the count, with no second scan of the target and no second
+    * deduplication of `changes`. */
+  def update(target: DataFrame, changes: DataFrame, on: Seq[String],
+      matched: Observation): DataFrame =
+    updateJoin(target, changes, on, Some(matched))
+
+  /** The count an observed [[update]] recorded; blocks until the
+    * frame's first action has run. No metric row means the optimizer
+    * proved the join empty and pruned the observer with it: nothing
+    * matched. */
+  def matchedRows(matched: Observation): Long =
+    matched.get.get(MatchedRows).fold(0L)(_.asInstanceOf[Long])
+
+  private val MatchedRows = "matched_rows"
+
+  private def updateJoin(target: DataFrame, changes: DataFrame, on: Seq[String],
+      counter: Option[Observation]): DataFrame = {
     require(on.nonEmpty, "update requires key columns (reference: database/main.py:253)")
     val u = changes.dropDuplicates(on).withColumn(UFlag, lit(true)).alias("u")
-    val joined = target.alias("t").join(u, on, "left")
+    val joined0 = target.alias("t").join(u, on, "left")
+    // `changes` is deduplicated on the key, so each target row appears
+    // once and the matched rows are the ones carrying the flag
+    val joined = counter.fold(joined0)(
+      joined0.observe(_, count(col(s"u.$UFlag")).as(MatchedRows)))
     val matched = coalesce(col(s"u.$UFlag"), lit(false))
     val uCols = changes.columns.toSeq
     val outCols = target.columns.toSeq.map { c =>
@@ -108,8 +134,10 @@ object Mutations {
     joined.select(outCols: _*)
   }
 
-  /** Rowcount an update would touch (the reference returns
-    * `result.rowcount`, main.py:268): matched target rows. */
+  /** Rowcount an update would touch, as a separate semi-join: matched
+    * target rows. It scans the target a second time, so
+    * `Database.update` takes the observed count instead; this stays as
+    * the plain formulation that count is checked against. */
   def updateRowCount(target: DataFrame, changes: DataFrame, on: Seq[String]): Long =
     target.join(changes.dropDuplicates(on), on, "left_semi").count()
 

@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Fixture access: one parquet file per table under a scale-factor dir
   * (TESTDATA.md). Also registers temp views so `Sql.executeRaw` (D15)
@@ -132,7 +133,8 @@ trait AtomicOps {
   * RACING second writer is fenced — it throws, never clobbers.
   *
   * Layout: `$root/$name/v{N}/part-*.parquet` + `$root/$name/_LATEST`
-  * containing the current version number.
+  * containing the current version number (+ `_ERASED`, the count of
+  * in-place erasures, once [[forgetWhere]] has run).
   *
   * `atomicOps`: the fence/swap primitives — defaults to the
   * HDFS/local-atomic Hadoop implementation; see [[AtomicOps]] for
@@ -141,19 +143,53 @@ final class TableStore(spark: SparkSession, root: String,
     atomicOps: Option[AtomicOps] = None) {
   private val VersionDir = "v(\\d+)".r
   private val ClaimFile = "v(\\d+)\\._CLAIM".r
-  // Snapshot-read memo (r18; guide §6 — repeated listings): committed
-  // snapshots are IMMUTABLE, so the DataFrame for a (table, version)
-  // pair — its file listing and the 1-task parquet schema-inference
-  // job a fresh `spark.read.parquet` runs — can be built once per
-  // store instance and reused by every later read. The index gates
-  // re-read the same snapshot many times (manifest per load, encoded
-  // per search/audit); each fresh read paid listing + schema job +
-  // analysis. Only POINTER-COMMITTED versions ever enter (both read
-  // paths check the pointer first), so a phantom dir a later write
-  // overwrites can never be served stale. Entries drop when their
-  // files can vanish: expireVersions and drop invalidate.
+
+  /** One committed snapshot as this instance serves it: the schema,
+    * when this instance wrote the files itself, and the frame, built
+    * on first use. With a schema the frame is `spark.read.schema(..)`
+    * and costs a file listing only; without one it is a plain
+    * `spark.read.parquet`, which also runs the 1-task schema-inference
+    * job. */
+  private final class Snapshot(path: String, schema: Option[StructType]) {
+    lazy val frame: DataFrame = schema match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** Snapshot memo (guide §6 — repeated listings). Committed snapshots
+    * are IMMUTABLE, so the frame of a (table, version) pair is built
+    * once per store instance and reused by every later read; the index
+    * gates re-read the same snapshot many times (manifest per load,
+    * encoded per search/audit).
+    *
+    *  - '''What enters.''' Only POINTER-COMMITTED versions, so a phantom
+    *    dir a later write overwrites is never served. [[write]] (and so
+    *    [[compact]]) enters the version it committed, right after its
+    *    pointer swap landed, with the schema of the frame it wrote;
+    *    [[forgetWhere]] does the same for each version it rewrites. Both
+    *    are exactly what inference would read back from the files'
+    *    footers (nullability is relaxed on read either way), so no
+    *    inference job runs after a write. A `partitionBy` write records
+    *    nothing: its partition columns are re-inferred from directory
+    *    names. Versions this instance only reads enter on first read,
+    *    with an inferred schema.
+    *  - '''When it leaves.''' [[expireVersions]] and [[drop]] remove
+    *    the entries whose files they delete; [[forgetWhere]] replaces
+    *    the entry of each version it rewrites. An erasure by ANOTHER
+    *    instance on the root drops all of the table's entries:
+    *    [[forgetWhere]] bumps the table's `_ERASED` marker, and every
+    *    memo read and entry first compares the marker with the value
+    *    the table's entries were built under (one small file read; no
+    *    Spark job, no directory listing).
+    *  - '''Not seen.''' A [[drop]] and re-create of the table by ANOTHER
+    *    instance reuses version numbers the memo may hold; drop and
+    *    re-create through the instance that reads, or use a new one. */
   private val snapshotMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), DataFrame]
+    scala.collection.concurrent.TrieMap.empty[(String, Int), Snapshot]
+  // per table: the `_ERASED` marker content its memo entries were built under
+  private val memoErasures =
+    scala.collection.concurrent.TrieMap.empty[String, String]
   private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
   /** Default [[AtomicOps]]: native HDFS/local atomicity (see the
     * trait's per-store-class matrix for where this is NOT enough). */
@@ -179,18 +215,55 @@ final class TableStore(spark: SparkSession, root: String,
   // newest complete dir) from "pointer LOST on a swapped table" (manual
   // damage — recovery must not silently promote a phantom snapshot)
   private def swappedMarker(name: String) = new Path(tableDir(name), "_SWAPPED")
+  // erasure counter [[forgetWhere]] bumps after each version it
+  // rewrites in place: the snapshot memo's freshness check
+  private def erasedMarker(name: String) = new Path(tableDir(name), "_ERASED")
+  private def snapshotDir(name: String, v: Int) = new Path(tableDir(name), s"v$v")
+
+  private def readText(p: Path): String = {
+    val in = fs.open(p)
+    try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim
+    finally in.close()
+  }
+
+  private def erasures(name: String): String =
+    try readText(erasedMarker(name))
+    catch { case _: java.io.FileNotFoundException => "" }
+
+  private def forgetMemo(name: String): Unit =
+    snapshotMemo.keys.filter(_._1 == name).foreach(snapshotMemo.remove)
+
+  /** Drop the table's memo entries if any instance erased rows since
+    * they were built. */
+  private def syncErasures(name: String): Unit = {
+    val seen = erasures(name)
+    if (!memoErasures.get(name).contains(seen)) {
+      forgetMemo(name)
+      memoErasures(name) = seen
+    }
+  }
+
+  /** The memoized frame of committed version `v` (the caller has
+    * checked the pointer). */
+  private def snapshot(name: String, v: Int): DataFrame = {
+    syncErasures(name)
+    snapshotMemo.getOrElseUpdate((name, v),
+      new Snapshot(snapshotDir(name, v).toString, None)).frame
+  }
+
+  /** Enter a version this instance has just committed, with the schema
+    * of the frame it wrote (None: infer on first read). */
+  private def remember(name: String, v: Int, schema: Option[StructType]): Unit = {
+    syncErasures(name)
+    snapshotMemo((name, v)) = new Snapshot(snapshotDir(name, v).toString, schema)
+  }
 
   /** The raw `_LATEST` pointer, no recovery fallback — what the write
     * fence watches (the fallback would see the fencing writer's OWN
     * freshly committed dir and misread it as a racer). */
   private def readPointer(name: String): Option[Int] = {
     val lf = latestFile(name)
-    if (!fs.exists(lf)) None
-    else {
-      val in = fs.open(lf)
-      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toInt)
-      finally in.close()
-    }
+    if (!fs.exists(lf)) None else Some(readText(lf).toInt)
   }
 
   private def currentVersion(name: String): Option[Int] = {
@@ -238,8 +311,7 @@ final class TableStore(spark: SparkSession, root: String,
   def read(name: String): DataFrame = {
     val v = currentVersion(name).getOrElse(
       throw new IllegalArgumentException(s"no such table: $name"))
-    snapshotMemo.getOrElseUpdate((name, v),
-      spark.read.parquet(new Path(tableDir(name), s"v$v").toString))
+    snapshot(name, v)
   }
 
   /** All COMMITTED snapshot versions of a table, ascending — every
@@ -271,15 +343,12 @@ final class TableStore(spark: SparkSession, root: String,
     * stays valid until [[drop]]; compaction/retention policy is the
     * caller's. */
   def readVersion(name: String, version: Int): DataFrame = {
-    val dest = new Path(tableDir(name), s"v$version")
+    val dest = snapshotDir(name, version)
     // retention guard: a version expireVersions deleted fails BY NAME
     // — table, version, and the keepLast that doomed it — not as a
     // bare no-such-version (see expireVersions' reader contract)
     if (!fs.exists(dest) && fs.exists(expiredMarker(name, version))) {
-      val in = fs.open(expiredMarker(name, version))
-      val kept = try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim
-      finally in.close()
+      val kept = readText(expiredMarker(name, version))
       throw new IllegalStateException(
         s"snapshot v$version of table $name was deleted by " +
         s"expireVersions(keepLast=$kept) — it is past the retention " +
@@ -291,8 +360,7 @@ final class TableStore(spark: SparkSession, root: String,
         currentVersion(name).exists(version <= _),
       s"no committed snapshot v$version of table $name " +
         s"(committed: ${versions(name).mkString(",")})")
-    snapshotMemo.getOrElseUpdate((name, version),
-      spark.read.parquet(dest.toString))
+    snapshot(name, version)
   }
 
   /** Write a new snapshot then atomically swap the pointer.
@@ -393,6 +461,10 @@ final class TableStore(spark: SparkSession, root: String,
           "breadcrumb — aborting before the pointer swap (the marker is " +
           "what stops a later pointer loss from promoting a phantom)")
       atomic.renameOverwrite(tmp, latestFile(name))
+      // committed: later reads reuse the written schema instead of
+      // inferring it (a partitioned layout re-infers its partition
+      // columns from directory names, so it records nothing)
+      remember(name, next, if (partitionBy.isEmpty) Some(df.schema) else None)
       // sweep pointer temps a previous kill stranded (cheap: name-match
       // on the table dir listing only)
       fs.listStatus(tableDir(name)).toSeq.filter(_.isFile)
@@ -444,7 +516,8 @@ final class TableStore(spark: SparkSession, root: String,
   }
 
   def drop(name: String): Unit = {
-    snapshotMemo.keys.filter(_._1 == name).foreach(snapshotMemo.remove)
+    forgetMemo(name)
+    memoErasures.remove(name)
     if (fs.exists(tableDir(name))) fs.delete(tableDir(name), true)
   }
 
@@ -468,7 +541,7 @@ final class TableStore(spark: SparkSession, root: String,
   def layoutStats(name: String): (Int, Long, Long, Long) = {
     val v = currentVersion(name).getOrElse(
       throw new IllegalArgumentException(s"no such table: $name"))
-    val sizes = fs.listStatus(new Path(tableDir(name), s"v$v")).toSeq
+    val sizes = fs.listStatus(snapshotDir(name, v)).toSeq
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       .map(_.getLen)
     require(sizes.nonEmpty, s"committed snapshot v$v of $name has no data files")
@@ -498,12 +571,17 @@ final class TableStore(spark: SparkSession, root: String,
           condition, org.apache.spark.sql.functions.lit(false)))
         .localCheckpoint(true)
       removed += before - keep.count()
-      keep.write.mode("overwrite")
-        .parquet(new Path(tableDir(name), s"v$v").toString)
+      keep.write.mode("overwrite").parquet(snapshotDir(name, v).toString)
       keep.unpersist()
-      // erasure is the ONE in-place rewrite of committed history —
-      // the memoized frame (and its bound file listing) is stale now
-      snapshotMemo.remove((name, v))
+      // erasure is the ONE in-place rewrite of committed history: every
+      // instance's memoized frame of `v` (its bound file listing) is
+      // stale now, so bump the marker their memo reads compare against
+      syncErasures(name)
+      val bumped = (memoErasures(name).toLongOption.getOrElse(0L) + 1).toString
+      val o = fs.create(erasedMarker(name), true)
+      try o.write(bumped.getBytes("UTF-8")) finally o.close()
+      memoErasures(name) = bumped
+      remember(name, v, Some(cur.schema))
     }
     removed
   }
@@ -538,7 +616,7 @@ final class TableStore(spark: SparkSession, root: String,
       // existing dir — never the other way around (dir gone, no name)
       val o = fs.create(expiredMarker(name, v), true)
       try o.write(keepLast.toString.getBytes("UTF-8")) finally o.close()
-      fs.delete(new Path(tableDir(name), s"v$v"), true)
+      fs.delete(snapshotDir(name, v), true)
     }
     doomed
   }

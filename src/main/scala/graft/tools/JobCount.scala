@@ -46,8 +46,9 @@ object JobCount {
       val t0 = System.nanoTime()
       fn(spark, dir).write.format("noop").mode("overwrite").save()
       val s = (System.nanoTime() - t0) / 1e9
-      // the listener bus is async — give it a beat before reading
-      Thread.sleep(500)
+      // the listener bus is async: read only after it has delivered
+      // every job-end event the run posted
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
       val js = jobs.sortBy(_._1)
       println(f"[jobs] $name: ${js.size} jobs, ${s}%.2f s wall, " +

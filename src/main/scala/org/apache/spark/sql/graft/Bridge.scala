@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -7,11 +8,19 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Minimal escape hatch into the `private[sql]` Column ⇄ Expression
   * converters — the supported pattern for libraries that ship custom
   * Catalyst expressions without forking Spark — plus the internal
-  * RDD[InternalRow] → DataFrame constructor behind [[planBarrier]].
-  * Nothing else from the private API surface is touched. */
+  * RDD[InternalRow] → DataFrame constructor behind [[planBarrier]],
+  * and the `private[spark]` listener-bus drain behind
+  * [[drainListenerBus]]. Nothing else from the private API surface is
+  * touched. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Block until the listener bus has delivered every event posted so
+    * far. Listener-based counts (job census, job-count specs) read
+    * their state after this, not after a fixed sleep that undercounts
+    * on a loaded machine. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   /** LOGICAL-plan barrier: rewrap `df`'s physical RDD as a leaf
     * DataFrame. An iterative loop that builds round k+1's frame on

@@ -17,6 +17,15 @@ class PlanShapeSpec extends SparkSpec {
   private def planOf(q: String): String =
     plan(SparkEntry.queries(q)(spark, sfDir))
 
+  /** The plan text above the cached corpus. Fails when the plan has no
+    * cached relation at all, so the shape assertions on the slice cannot
+    * pass on an empty string. */
+  private def aboveCacheOf(p: String): String = {
+    val at = p.indexOf("InMemoryRelation")
+    assert(at >= 0, "plan lost the cached-corpus boundary (no InMemoryRelation): " + p)
+    p.substring(0, at)
+  }
+
   test("predicate queries push filters into the parquet scan and prune columns") {
     val p = planOf("q03_pred_eq")
     assert(p.contains("PushedFilters: [IsNotNull(c_mktsegment), EqualTo(c_mktsegment,BUILDING)]"), p)
@@ -80,7 +89,7 @@ class PlanShapeSpec extends SparkSpec {
       // everything ABOVE the cached normalized corpus must be narrow:
       // the only allowed shape is Project → InMemoryTableScan (the one
       // exchange lives inside the cached relation's build plan)
-      val aboveCache = p.substring(0, math.max(0, p.indexOf("InMemoryRelation")))
+      val aboveCache = aboveCacheOf(p)
       assert(aboveCache.contains("InMemoryTableScan"), p)
       Seq("Exchange", "Join", "Window").foreach(op =>
         assert(!aboveCache.contains(op), s"assignment must not $op: $p"))
@@ -102,7 +111,7 @@ class PlanShapeSpec extends SparkSpec {
       // no SHUFFLE exchange above the cached corpus — the argmax agg
       // and the vector re-join ride the build's id partitioning (AQE
       // may still BroadcastExchange the tiny fixture side; that's fine)
-      val aboveCache = p.substring(0, math.max(0, p.indexOf("InMemoryRelation")))
+      val aboveCache = aboveCacheOf(p)
       assert("[+:]- Exchange ".r.findFirstIn(aboveCache).isEmpty,
         "assignment must reuse the build's id partitioning (no shuffle): " + p)
     } finally idx.unpersist()
@@ -121,7 +130,7 @@ class PlanShapeSpec extends SparkSpec {
       val p = plan(idx.encoded)
       assert(p.contains("BroadcastNestedLoopJoin"),
         "constants must broadcast-join, not embed as literals: " + p)
-      val aboveCache = p.substring(0, math.max(0, p.indexOf("InMemoryRelation")))
+      val aboveCache = aboveCacheOf(p)
       assert("[+:]- Exchange ".r.findFirstIn(aboveCache).isEmpty,
         "fused encode must reuse the build's id partitioning (no shuffle): " + p)
       Seq("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin").foreach(op =>
