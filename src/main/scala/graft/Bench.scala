@@ -1,72 +1,28 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Json
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Benchmark main (driver contract): runs every SparkEntry query on
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line. Queries are fully
+/** Benchmark main: `graft.Bench [name-substrings]` times the contract
+  * queries on SPARK_GRAFT_SF_DIR (all of them, or those `Verify`'s
+  * comma-separated name filter selects) under one fixed protocol: one
+  * warm-up, then two interleaved passes in name order, each query
   * materialized through the `noop` sink (count() alone would let
-  * Catalyst prune projections and under-report work).
+  * Catalyst prune projections and under-report work) and followed by
+  * `clearCache()`. A query's time is the min of its two passes; a query
+  * that fails reports null and stays out of the total.
   *
-  * COVERAGE-FIRST DEGRADATION (r16, r15 verdict item 1). Two rounds
-  * running, the driver's box was slow enough (~10× the builder's
-  * rate) that the r15 alphabetical pass-1 burned the whole self
-  * budget on a name-ordered prefix — 77 of 338 timed, comparable to
-  * nothing. The protocol now degrades by VALUE, not by name:
-  *  - CHEAPEST-FIRST order, by the previous round's committed
-  *    per-query costs (`bench_ref.json`; fallback name order): a
-  *    budget trip then skips only the few priced audits at the tail,
-  *    and the timed set is the maximum the budget could buy.
-  *  - CALIBRATION PROBE: the first few timed queries estimate the
-  *    box's slowdown vs the reference; if two interleaved passes
-  *    plus the retime margin cannot fit the budget, the run switches
-  *    to SINGLE-PASS mode immediately — it never discovers the slow
-  *    box dozens of queries in.
-  *  - AUTO BUDGET-FIT TIER (r17, r16 verdict item 4): when the
-  *    calibration probe proves even a SINGLE full pass cannot fit
-  *    the budget, the run doesn't limp on and predictively skip an
-  *    unplanned tail — it DEFERS, up front, exactly the most
-  *    expensive queries that don't fit (the largest cheapest-first
-  *    prefix that fits is kept), names them in `deferred`, and then
-  *    times 100% of what remains. After pass 1 the slowdown is
-  *    known exactly, so a probe that over-read a burst gets its
-  *    deferrals RECLAIMED (cheapest first) from the proven surplus
-  *    — coverage first, second samples after.
-  *  - PREDICTIVE SKIPS: a query predicted to blow the remaining
-  *    budget (slowdown × its reference cost) is skipped BEFORE it
-  *    starts — with a committed reference the budget is never
-  *    overshot by a 15 s audit that was already doomed. (Without
-  *    `bench_ref.json` every unseen query is priced at the 1.0
-  *    default, so one genuinely expensive query CAN overshoot —
-  *    reference-free runs get coverage order, not the guarantee.)
-  *    Pass-2/3 predictions take max(reference estimate, the query's
-  *    own pass-1 sample): the observed sample is the better
-  *    predictor and an optimistic reference can't sneak a repeat of
-  *    a query that already proved expensive.
-  *  - COMPARABILITY ANCHOR: the compact line carries `obs_on_ref`
-  *    (observed seconds summed over timed ∩ reference) next to
-  *    `ref_sum` (the reference's seconds over the SAME set), so ANY
-  *    timed subset yields one cross-round-comparable ratio — a
-  *    degraded artifact is no longer informationally empty.
-  *  - CHUNKED PARTIALS: per-query values stream as
-  *    `{"metric":"partial",...}` lines sized for the driver's
-  *    ~2000-char stdout tail window, ahead of the final line.
-  *  - FINAL LINE WITH QUERIES (r18, r17 verdict item 2): the final
-  *    `{"metric":"total",...}` line itself carries a "queries" map
-  *    of the most expensive timed queries, packed to fit the tail
-  *    window (`packEntries`), plus `queries_omitted`.
-  *
-  * `SPARK_GRAFT_BENCH_TIER` (r15 verdict item 5): `fast` runs only
-  * queries under the 5 s reference bar (the deliberately-priced
-  * audits defer to a `heavy`-tier run as a second artifact — named
-  * in `deferred`, never silently dropped); `heavy` runs the
-  * complement; unset runs everything. */
+  * The per-query map goes to `bench_out.json`; the LAST stdout line is
+  * the summary. It anchors the run against `bench_ref.json`, the
+  * committed per-query seconds of an earlier round: `obs_on_ref` sums
+  * the observed seconds over the timed queries the reference holds,
+  * `ref_sum` the reference's seconds over that same set, so any
+  * selection yields one cross-round ratio. */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
 
-  /** Reference cost bar between the `fast` and `heavy` tiers. */
-  private[graft] val HeavyRefS = 5.0
-
-  /** Parse `bench_ref.json` — the committed previous-round per-query
-    * seconds (full names, the bench_out.json shape). A hand-rolled
+  /** Parse `bench_ref.json` (the bench_out.json shape). A hand-rolled
     * key-scan, not a JSON parser: the only consumers are q-named
     * numeric entries and the optional `ref_round` marker, and the
     * file is trusted repo content. */
@@ -79,466 +35,62 @@ object Bench {
     "\"ref_round\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(text)
       .map(_.group(1))
 
-  /** Median of the reference costs — the cost assigned to a query the
-    * reference has never seen (new this round): mid-pack, so it runs
-    * neither first (untrusted) nor last (skipped first). */
-  private[graft] def medianCost(ref: Map[String, Double]): Double =
-    if (ref.isEmpty) 1.0
-    else {
-      val v = ref.values.toIndexedSeq.sorted
-      v(v.size / 2)
-    }
-
-  /** Coverage-first order: cheapest reference cost first, name as the
-    * tiebreak (and the total order when no reference exists). */
-  private[graft] def cheapestFirst[A](entries: Seq[(String, A)],
-      refCost: String => Double): Seq[(String, A)] =
-    entries.sortBy { case (n, _) => (refCost(n), n) }
-
-  /** Calibration verdict: can the full interleaved protocol (two
-    * passes + ~10% pass-3 retime margin) fit the remaining budget at
-    * the observed slowdown? `refObsS` = reference seconds of the
-    * already-timed probe (its second pass is still to pay). */
-  private[graft] def twoPassFits(elapsedS: Double, slowdown: Double,
-      refTotalS: Double, refObsS: Double, budgetS: Double): Boolean = {
-    val pass1Remaining = slowdown * (refTotalS - refObsS)
-    val pass2 = slowdown * refTotalS
-    elapsedS + pass1Remaining + 1.1 * pass2 <= 0.95 * budgetS
-  }
-
-  /** Can one single pass over the rest of the suite fit the budget? */
-  private[graft] def singlePassFits(elapsedS: Double, slowdown: Double,
-      refTotalS: Double, refObsS: Double, budgetS: Double): Boolean =
-    elapsedS + slowdown * (refTotalS - refObsS) <= 0.95 * budgetS
-
-  /** Auto budget-fit deferral (r16 verdict item 4): given the
-    * still-untimed suite tail in CHEAPEST-FIRST order with reference
-    * costs, keep the largest prefix whose predicted cost fits the
-    * remaining budget and return the names of the DEFERRED tail.
-    * The kept prefix then times completely (no unplanned skips), so
-    * the artifact reads "n_timed == n_queries, n_deferred named" —
-    * a planned fast-suite run — instead of a skip-riddled one. */
-  private[graft] def budgetFitDeferrals(remaining: Seq[(String, Double)],
-      elapsedS: Double, slowdown: Double, budgetS: Double): Seq[String] = {
-    val allow = 0.95 * budgetS - elapsedS
-    var acc = 0.0
-    remaining.flatMap { case (n, c) =>
-      acc += slowdown * c
-      if (acc > allow) Some(n) else None
-    }
-  }
-
-  /** Layer-3 packing (r18, fixes r17 verdict item 2). The driver
-    * json-parses the FINAL stdout line for a "queries" map but reads
-    * only the last ~2000 chars of sbt output — the full 344-query map
-    * (~4.3k chars) cannot fit that window, and the r16/r17 compact
-    * final line carried NO map at all, so PERF recorded parsed:null
-    * two rounds running. Greedy prefix: keep rendered `"qNN":s.ss`
-    * entries (callers pass them MOST EXPENSIVE FIRST — the set a perf
-    * audit compares) while they fit `budgetChars` including the
-    * joining commas. The complete map still streams in the partial
-    * chunks above the final line and lands in bench_out.json. */
-  private[graft] def packEntries(entries: Seq[String], budgetChars: Int): Seq[String] = {
-    var used = 0
-    entries.takeWhile { e =>
-      val fits = used + e.length + 1 <= budgetChars
-      if (fits) used += e.length + 1
-      fits
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // warm the session (executor start, codegen compiler, parquet
     // footer cache) so the first timed query isn't charged for it
     SparkEntry.queries.get("q01_count")
       .foreach(fn => try fn(spark, sfDir).count() catch { case _: Throwable => () })
+    val refText =
+      try Files.readString(Paths.get("bench_ref.json")) catch { case _: java.io.IOException => "" }
+    run(spark, sfDir, SparkEntry.select(args.headOption), refText, Paths.get("bench_out.json"))
+    spark.stop()
+  }
 
-    // ---- reference costs (previous round, committed) ----------------
-    val refText = {
-      val p = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", "bench_ref.json"))
-      try new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8)
-      catch { case _: Throwable => "" }
-    }
-    val ref = parseRefCosts(refText)
-    val refRound = parseRefRound(refText).getOrElse("none")
-    val refDefault = medianCost(ref)
-    def refCost(name: String): Double =
-      ref.getOrElse(name, ref.getOrElse(name.takeWhile(_ != '_'), refDefault))
-    def hasRef(name: String): Boolean =
-      ref.contains(name) || ref.contains(name.takeWhile(_ != '_'))
-
-    // ---- suite selection: dev filter, tier, cheapest-first order ----
-    // dev-only filter (comma substrings) for targeted local timing —
-    // the driver never sets it, so the gate always runs the full suite
-    val onlyPats = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').toSeq).getOrElse(Nil)
-    val all = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => onlyPats.isEmpty || onlyPats.exists(n.contains) }
-    val tier = sys.env.get("SPARK_GRAFT_BENCH_TIER").map(_.trim.toLowerCase)
-      .filter(t => t == "fast" || t == "heavy")
-    val (selected, deferred) = tier match {
-      case Some("fast")  => all.partition { case (n, _) => refCost(n) < HeavyRefS }
-      case Some("heavy") => all.partition { case (n, _) => refCost(n) >= HeavyRefS }
-      case _             => (all, Seq.empty)
-    }
-    val order = cheapestFirst(selected, refCost)
-    // the stdout line keys queries by qNN prefix — fail BEFORE the
-    // first timed pass (the keys are known now; discovering a
-    // duplicate after minutes of measurement would waste the run and
-    // emit no JSON at all)
-    locally {
-      val shortKeys = all.map(_._1.takeWhile(_ != '_'))
-      val dups = shortKeys.diff(shortKeys.distinct).distinct
-      require(dups.isEmpty, s"duplicate short bench keys: ${dups.mkString(",")}")
-    }
-    val refTotal = order.map { case (n, _) => refCost(n) }.sum
-
-    // ---- shared state: EVERY mutation under `lock` (r15 advice: the
-    // SIGTERM hook snapshots these from another thread; LinkedHashSet
-    // and mutable.Map are not thread-safe, and a torn read would
-    // corrupt the partial flush — the exact path the hook guarantees)
-    val lock = new Object
+  /** The two timed passes over `queries`; writes the summary plus the
+    * per-query map to `out`, then prints the summary line. */
+  private[graft] def run(spark: SparkSession, sfDir: String, queries: Seq[(String, Query)],
+      refText: String, out: Path): Unit = {
+    val best = scala.collection.mutable.Map.empty[String, Double]
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    val skipped = scala.collection.mutable.LinkedHashSet.empty[String]
-    // auto budget-fit tier (r16 verdict item 4): queries DEFERRED at
-    // calibration because even one full pass cannot fit the budget —
-    // a planned, named exclusion (second bench artifact's work), not
-    // a skip
-    val autoDeferred = scala.collection.mutable.LinkedHashSet.empty[String]
-    val samples = scala.collection.mutable.Map.empty[String, List[Double]]
-      .withDefaultValue(Nil)
-    @volatile var finished = false
-    @volatile var mode = "min_interleaved_2_cf"
-    @volatile var degradedFlag = false
-
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // the guard is checked as each query comes up: one that failed in
+    // pass 1 is not run again
+    for (_ <- 1 to 2; (name, fn) <- queries if !failed(name)) {
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        lock.synchronized { failed += name } // a failed query must not read as a fast one
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val t = (System.nanoTime() - t0) / 1e9
+        best(name) = best.get(name).fold(t)(math.min(_, t))
+      } catch { case e: Throwable =>
+        failed += name
+        best -= name // a failed query must not read as a fast one
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
       }
-      val t = (System.nanoTime() - t0) / 1e9
       // queries are independent; drop any intermediate persists (LSH
       // signatures etc.) so memory stays flat across the suite
       spark.catalog.clearCache()
-      t
     }
 
-    // locale-proof decimal formatting (the f interpolator follows the
-    // JVM default locale; a comma decimal would corrupt the JSON);
-    // trailing zeros stripped ("0.50" -> "0.5") — every saved char is
-    // margin against the driver's ~2000-char stdout tail window
-    def fmt(v: Double, scale: Int): String = {
-      val s = BigDecimal(v)
-        .setScale(scale, BigDecimal.RoundingMode.HALF_UP).toString
-      if (s.contains('.')) s.reverse.dropWhile(_ == '0').stripPrefix(".").reverse
-      else s
-    }
-
-    // comparability anchor over a done-set: observed and reference
-    // seconds summed over the SAME timed ∩ reference queries — one
-    // division away from a cross-round ratio whatever subset got timed
-    def anchor(done: Seq[(String, Double)]): (Double, Double) = {
-      val onRef = done.filter { case (k, v) => v >= 0 && hasRef(k) }
-      (onRef.map(_._2).sum, onRef.map { case (k, _) => refCost(k) }.sum)
-    }
-
-    // PARTIAL-RESULT GUARANTEE (r14 lesson: the driver's timeout
-    // SIGTERM'd the run mid-suite and the round's bench artifact was
-    // rc=124 with parsed:null). A shutdown hook flushes a VALID
-    // compact JSON line (completed-query total + counts + the
-    // obs_on_ref/ref_sum anchor + truncated:true) and writes the
-    // per-query partial to bench_out.json. The hook is disarmed
-    // before the normal final print (one artifact either way).
-    def partialJson(full: Boolean): String = lock.synchronized {
-      val done = order.collect {
-        case (k, _) if samples(k).nonEmpty || failed.contains(k) =>
-          k -> (if (failed.contains(k)) -1.0 else samples(k).min)
-      }
-      val total = done.collect { case (_, v) if v >= 0 => v }.sum
-      val (obsOnRef, refSum) = anchor(done)
-      val failedJson0 = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val per = if (!full) "" else ",\"queries\":" + done.map { case (k, v) =>
-        "\"" + k + "\":" + (if (v < 0) "null" else fmt(v, 3))
-      }.mkString("{", ",", "}")
-      val nDef = if (autoDeferred.isEmpty) ""
-        else s""","tier":"auto_fit","n_deferred":${autoDeferred.size}"""
-      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","mode":"$mode","truncated":true,"n_done":${done.size},"n_queries":${order.size - autoDeferred.size},"obs_on_ref":${fmt(obsOnRef, 1)},"ref_sum":${fmt(refSum, 1)},"ref_round":"$refRound","failed":$failedJson0$nDef$per,"sf":"$sfDir"}"""
-    }
-    val hook = new Thread(() => if (!finished) {
-      println(partialJson(full = false))
-      System.out.flush()
-      try java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
-        partialJson(full = true).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      catch { case _: Throwable => () }
-    })
-    Runtime.getRuntime.addShutdownHook(hook)
-
-    // SELF-BUDGET (r15): never meet the driver's timeout — degrade
-    // instead. Default 1320 s ≈ 22 min, under any plausible driver
-    // timeout with startup margin.
-    val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1320").toDouble
-    val tStart = System.nanoTime()
-    def elapsedS: Double = (System.nanoTime() - tStart) / 1e9
-
-    // live slowdown estimate vs the reference: observed pass-1 sum /
-    // reference sum over the timed-so-far set. Starts at 1 (trust the
-    // reference) and sharpens with every timed query; a floor on the
-    // denominator keeps the first sub-ms queries from swinging it.
-    var obsSum = 0.0
-    var refObs = 0.0
-    def slowdown: Double = if (refObs > 0.05) obsSum / refObs else 1.0
-
-    // ---- pass 1: cheapest-first, calibrated, predictive ------------
-    var calibrated = ref.isEmpty // no reference → nothing to calibrate against
-    var timedCount = 0
-    for (((name, fn), i) <- order.zipWithIndex) {
-      if (lock.synchronized(autoDeferred.contains(name))) ()
-      // predictive skip: don't START a query the remaining budget
-      // cannot absorb (cheapest-first ⇒ the skipped tail is the few
-      // priced audits, not an alphabetical prefix). Backstop only —
-      // the auto_fit deferral below plans the exclusion up front.
-      else if (elapsedS + slowdown * refCost(name) > budgetS) {
-        lock.synchronized {
-          if (samples(name).isEmpty && !failed.contains(name)) skipped += name
-        }
-        degradedFlag = true
-      } else {
-        val t = timeOne(name, fn)
-        // a failure's time-to-failure must not feed the slowdown
-        // estimate: a fast-failing expensive query would read the box
-        // as fast (its full refCost against a near-zero observation)
-        // and under-predict everything after it
-        val ok = lock.synchronized { samples(name) ::= t; !failed.contains(name) }
-        if (ok) { obsSum += t; refObs += refCost(name); timedCount += 1 }
-        // calibration probe: once the estimate has substance (≥5
-        // queries and ≥2 s observed, or 15 queries), decide the mode
-        // ONCE — a slow box switches to single-pass here, queries in,
-        // not 77 queries in
-        if (!calibrated && ((timedCount >= 5 && obsSum >= 2.0) || timedCount >= 15)) {
-          calibrated = true
-          if (!singlePassFits(elapsedS, slowdown, refTotal, refObs, budgetS)) {
-            // not even ONE pass fits: don't limp toward an unplanned
-            // skip tail — defer the most expensive remainder up front
-            // (auto_fit tier) and time 100% of what stays
-            val remaining = order.drop(i + 1).map { case (n, _) => n -> refCost(n) }
-            val defer = budgetFitDeferrals(remaining, elapsedS, slowdown, budgetS)
-            lock.synchronized { autoDeferred ++= defer }
-            mode = "single_pass_cf"
-            degradedFlag = true
-            System.err.println(f"[bench] calibration: slowdown ${slowdown}%.2fx vs $refRound — one " +
-              f"pass cannot fit the ${budgetS}%.0f s budget; deferring the ${defer.size} most " +
-              "expensive queries (auto_fit tier) to time 100% of the rest")
-          } else if (!twoPassFits(elapsedS, slowdown, refTotal, refObs, budgetS)) {
-            mode = "single_pass_cf"
-            degradedFlag = true
-            System.err.println(f"[bench] calibration: slowdown ${slowdown}%.2fx vs $refRound, " +
-              f"two-pass needs ~${slowdown * refTotal * 2.1}%.0f s of ${budgetS}%.0f s budget " +
-              "— switching to single-pass coverage-first mode")
-          }
-        }
-      }
-    }
-
-    // ---- pass 1b: reclaim deferrals the actuals disprove -----------
-    // the deferral was decided on a probe ESTIMATE; pass 1's own cost
-    // is exact. A calibration burst that misread the box must not
-    // strand budget while named queries sit untimed — coverage first,
-    // second samples after. Cheapest first (order already is).
-    if (lock.synchronized(autoDeferred.nonEmpty)) {
-      for ((name, fn) <- order) {
-        if (lock.synchronized(autoDeferred.contains(name)) &&
-            elapsedS + slowdown * refCost(name) <= 0.95 * budgetS) {
-          lock.synchronized { autoDeferred -= name }
-          val t = timeOne(name, fn)
-          val ok = lock.synchronized { samples(name) ::= t; !failed.contains(name) }
-          if (ok) { obsSum += t; refObs += refCost(name); timedCount += 1 }
-        }
-      }
-    }
-
-    // ---- pass 2 (interleaved min-of-2) + pass 3 (disagreement) -----
-    // the second sample runs minutes after the first (a full pass
-    // apart), so an ambient burst shorter than a pass inflates at
-    // most one of them; a third, targeted retime converts "burst
-    // longer than a pass" into three load-independent samples. After
-    // pass 1 the slowdown estimate is EXACT (pass 1's own cost), so
-    // the two-pass decision re-decides on ACTUALS — in BOTH
-    // directions: a calibration probe that hit a burst and misread
-    // the box as slow must not strand the rest of a budget that pass
-    // 1's real cost proves can buy a full second pass (r16: a 2600 s
-    // budget run went single-pass on a 30 s burst and left 1600 s
-    // unused), and a probe that misread fast still downgrades here.
-    val pass2Fits = elapsedS + 1.1 * obsSum <= 0.95 * budgetS
-    if (mode != "single_pass_cf" && !pass2Fits) {
-      mode = "single_pass_cf"
-      degradedFlag = true
-      System.err.println("[bench] post-pass-1 check: pass 2 does not fit the " +
-        "remaining budget — keeping single-pass samples")
-    } else if (mode == "single_pass_cf" && pass2Fits && skipped.isEmpty &&
-        lock.synchronized(autoDeferred.isEmpty)) {
-      mode = "min_interleaved_2_cf"
-      // the only degradation so far was the calibration verdict
-      // itself, and it just proved wrong (any deferrals were
-      // reclaimed above) — the artifact is a normal min-of-2 run
-      // (pass-2 budget refusals below re-set the flag)
-      degradedFlag = false
-      System.err.println("[bench] post-pass-1 check: the calibration probe " +
-        "over-read the box (burst); pass 1's actual cost fits a full " +
-        "second pass in the remaining budget — upgrading back to min-of-2")
-    }
-    // pass-2/3 predictions: max(reference estimate, the query's own
-    // pass-1 sample) — the observed sample is the better predictor of
-    // a repeat, and an optimistic reference (or the no-reference 1.0
-    // default) can't sneak a repeat of a query that already proved
-    // expensive
-    if (mode != "single_pass_cf") {
-      for ((name, fn) <- order) {
-        val pred = lock.synchronized {
-          val ts = samples(name)
-          if (ts.size == 1 && !failed.contains(name))
-            Some(math.max(slowdown * refCost(name), ts.min))
-          else None
-        }
-        pred.foreach { p =>
-          if (elapsedS + p > budgetS) degradedFlag = true
-          else {
-            val t = timeOne(name, fn)
-            lock.synchronized { samples(name) ::= t }
-          }
-        }
-      }
-      for ((name, fn) <- order) {
-        val pred = lock.synchronized {
-          val ts = samples(name)
-          if (ts.nonEmpty && !failed.contains(name) &&
-            ts.min > 0.3 && ts.max / ts.min >= 1.5)
-            Some(math.max(slowdown * refCost(name), ts.min))
-          else None
-        }
-        pred.foreach { p =>
-          if (elapsedS + p <= budgetS) {
-            val t = timeOne(name, fn)
-            lock.synchronized { samples(name) ::= t }
-          }
-        }
-      }
-    }
-
-    finished = true
-    try Runtime.getRuntime.removeShutdownHook(hook)
-    catch { case _: IllegalStateException => () } // already shutting down
-
-    // ---- report ------------------------------------------------------
-    // auto-deferred queries leave the run's denominator (like an
-    // explicit tier's deferred set): the artifact reads as a planned
-    // fast-suite run with the exclusions NAMED, not as skips
-    val (results, failedNames, skippedNames, autoDeferredNames) = lock.synchronized {
-      val eff = order.filterNot { case (n, _) => autoDeferred.contains(n) }
-      (eff.map { case (name, _) =>
-        val ts = samples(name)
-        name -> (if (ts.isEmpty) Double.NaN else ts.min)
-      }, failed.toSeq, skipped.toSeq, autoDeferred.toSeq)
-    }
-    val failedSet = failedNames.toSet
-    val skippedSet = skippedNames.toSet
-    def entries(short: Boolean, scale: Int, omitNull: Boolean) = results
-      .filter { case (k, v) =>
-        !omitNull || (!failedSet.contains(k) && !skippedSet.contains(k) && !v.isNaN) }
-      .map { case (k, v) =>
-        val key = if (short) k.takeWhile(_ != '_') else k
-        "\"" + key + "\":" + (if (failedSet.contains(k) || skippedSet.contains(k) ||
-          v.isNaN) "null" else fmt(v, scale))
-      }
-    // a failed query's time-to-failure is noise, not cost: report it
-    // as null and keep the headline total an aggregate of successes
-    val timed = results.filter { case (k, v) =>
-      !failedSet.contains(k) && !skippedSet.contains(k) && !v.isNaN }
-    val total = timed.map(_._2).sum
-    val (obsOnRef, refSum) = anchor(timed)
-    val failedJson = failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // a budget trip mid-pass-2 leaves some queries with ONE sample
-    // (min-of-1 reads hotter than min-of-2) — surface the count so a
-    // degraded total is never mistaken for a comparable one
-    val singleSample = lock.synchronized {
-      results.count { case (n, _) =>
-        !failedSet.contains(n) && !skippedSet.contains(n) && samples(n).size == 1 }
-    }
-    val nQueries = results.size
-    val degraded = degradedFlag || skippedNames.nonEmpty
-    val degradedLong = if (!degraded) ""
-      else ",\"budget_degraded\":true,\"n_single_sample\":" + singleSample +
-        ",\"skipped\":" + skippedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val degradedCompact = if (!degraded) ""
-      else s""","budget_degraded":true,"n_single_sample":$singleSample,"n_skipped":${skippedNames.size}"""
-    // an explicit SPARK_GRAFT_BENCH_TIER wins; otherwise a non-empty
-    // auto-deferral reports as the auto_fit tier — the deferred names
-    // are a second artifact's work list, never a silent drop
-    val (tierName, tierDeferred) =
-      if (tier.nonEmpty) (tier, deferred.map(_._1))
-      else if (autoDeferredNames.nonEmpty) (Some("auto_fit"), autoDeferredNames)
-      else (None, Seq.empty[String])
-    val tierLong = if (tierName.isEmpty) ""
-      else s""","tier":"${tierName.get}","deferred":""" +
-        tierDeferred.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val tierCompact = if (tierName.isEmpty) ""
-      else s""","tier":"${tierName.get}","n_deferred":${tierDeferred.size}"""
-    def json(short: Boolean, scale: Int) =
-      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","mode":"$mode","n_timed":${timed.size},"n_queries":$nQueries,"obs_on_ref":${fmt(obsOnRef, 1)},"ref_sum":${fmt(refSum, 1)},"ref_round":"$refRound","failed":$failedJson$degradedLong$tierLong,"queries":${entries(short, scale, omitNull = false).mkString("{", ",", "}")},"sf":"$sfDir"}"""
-    // The driver captures only the LAST ~2000 chars of sbt output
-    // (every BENCH_r artifact to date shows exactly that tail) — a
-    // full-suite per-query object cannot fit it. Three layers:
-    //  1. bench_out.json — full names, 3 decimals, the whole story;
-    //  2. chunked {"metric":"partial"} lines — short keys, 2
-    //     decimals, TIMED queries only, each chunk sized so the tail
-    //     window always ends with whole chunks, cheapest queries
-    //     first (the expensive tail — the queries a perf audit reads
-    //     first — lands in the LAST, most-visible chunk);
-    //  3. the summary line LAST — headline total, counts, the
-    //     obs_on_ref/ref_sum anchor, AND (r18) a packed "queries"
-    //     map of the most expensive timed queries that fits the
-    //     window whole, so the driver's last-line parse recovers
-    //     per-query data again (r17 verdict item 2).
-    val perQuery = entries(short = true, scale = 2, omitNull = true)
-    val chunkMax = 1400
-    val chunks = perQuery.foldLeft(List.empty[List[String]]) { (acc, e) =>
-      acc match {
-        case h :: t if (h.map(_.length + 1).sum + e.length) < chunkMax => (e :: h) :: t
-        case _ => List(e) :: acc
-      }
-    }.map(_.reverse).reverse
-    chunks.zipWithIndex.foreach { case (c, i) =>
-      println(s"""{"metric":"partial","chunk":${i + 1},"of":${chunks.size},"queries":${c.mkString("{", ",", "}")}}""")
-    }
-    // Layer 3 (r18 measurement-report fix, r17 verdict item 2): the
-    // FINAL line now carries a "queries" map again — r16/r17 printed
-    // the map only in the chunks and the driver parsed nothing two
-    // rounds running. The full map cannot fit the ~2000-char tail
-    // window, so the line packs the MOST EXPENSIVE timed queries
-    // (2-decimal qNN keys, the subset a perf comparison needs) up to
-    // a 1800-char line budget and names the omission count; timing
-    // methodology, anchors, chunk layer and bench_out.json are
-    // byte-identical to the r17 shapes.
-    val byCostDesc = timed.sortBy { case (_, v) => -v }
-      .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + fmt(v, 2) }
-    def finalLine(qs: Seq[String]): String =
-      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","mode":"$mode","n_timed":${timed.size},"n_queries":$nQueries,"obs_on_ref":${fmt(obsOnRef, 1)},"ref_sum":${fmt(refSum, 1)},"ref_round":"$refRound","failed":$failedJson$degradedCompact$tierCompact,"queries_omitted":${byCostDesc.size - qs.size},"queries":${qs.mkString("{", ",", "}")},"sf":"$sfDir"}"""
-    println(finalLine(packEntries(byCostDesc, 1800 - finalLine(Nil).length)))
-    java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
-      json(short = false, scale = 3).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    spark.stop()
+    val ref = parseRefCosts(refText)
+    val timed = queries.collect { case (n, _) if best.contains(n) => n -> best(n) }
+    val onRef = timed.filter { case (n, _) => ref.contains(n) }
+    // BigDecimal renders locale-proof ("1.5", never "1,5")
+    def num(v: Double, scale: Int) =
+      BigDecimal(v).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toString
+    def obj(fields: Seq[(String, String)]) =
+      fields.map { case (k, v) => s"${Json.str(k)}:$v" }.mkString("{", ",", "}")
+    val summary = Seq(
+      "metric" -> Json.str("total"), "value" -> num(timed.map(_._2).sum, 3),
+      "unit" -> Json.str("sec"), "mode" -> Json.str("min_interleaved_2"),
+      "n_timed" -> timed.size.toString, "n_queries" -> queries.size.toString,
+      "obs_on_ref" -> num(onRef.map(_._2).sum, 1),
+      "ref_sum" -> num(onRef.map { case (n, _) => ref(n) }.sum, 1),
+      "ref_round" -> Json.str(parseRefRound(refText).getOrElse("none")),
+      "failed" -> failed.toSeq.map(Json.str).mkString("[", ",", "]"),
+      "sf" -> Json.str(sfDir))
+    val perQuery = queries.map { case (n, _) => n -> best.get(n).fold("null")(num(_, 3)) }
+    Files.writeString(out, obj(summary :+ ("queries" -> obj(perQuery))))
+    println(obj(summary))
   }
 }

@@ -49,6 +49,14 @@ object SparkEntry {
       QueriesGovernance.queries ++
       QueriesAnalytics.queries ++ QueriesStats.queries
 
+  /** The queries whose names contain any of the comma-separated
+    * substrings in `patterns` (every query when absent), in name order:
+    * the selection `Verify`, `Bench` and `tools.Probe` all take. */
+  def select(patterns: Option[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val pats = patterns.map(_.split(',').toSeq)
+    queries.toSeq.sortBy(_._1).filter { case (n, _) => pats.forall(_.exists(n.contains)) }
+  }
+
   def oracleSql: Map[String, String] =
     QueriesCore.oracleSql ++ QueriesCuration.oracleSql ++
       QueriesGovernance.oracleSql ++

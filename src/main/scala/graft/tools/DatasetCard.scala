@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Fx
@@ -156,11 +156,7 @@ object DatasetCard {
 
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val docs = Fx.t(spark, dir, "documents")
     println(toJson(cardFor(docs, "doc_id", "text", langCol = Some("lang"),
       sourceCol = Some("source"))))

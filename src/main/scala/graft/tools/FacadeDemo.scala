@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import graft.Database
 import graft.core.{ColumnSpec, Pred}
@@ -9,11 +8,7 @@ import graft.core.{ColumnSpec, Pred}
   * end-to-end drive for the library surface). */
 object FacadeDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("graft-demo").toString

@@ -243,13 +243,7 @@ object Scale10x {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/scale10x")
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     if (args.contains("--skew-only")) {
       println(s"""{"metric":"scale10x-skew","skew_split":${skewSplitEngages(spark)}}""")

@@ -1,13 +1,11 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import com.fasterxml.jackson.databind.ObjectMapper
+import java.nio.file.Files
 
-/** Pure laws of the bench protocol's coverage-first degradation (r16,
-  * r15 verdict item 1): reference-cost parsing, cheapest-first
-  * ordering, and the calibration verdict. The end-to-end budget
-  * behavior is exercised by running graft.Bench with a low
-  * SPARK_GRAFT_BENCH_BUDGET_S (see BASELINE.md's round notes). */
-class BenchPlanSpec extends AnyFunSuite {
+/** The bench protocol: reference-cost parsing, and one run of the fixed
+  * two-pass protocol over an injected registry. */
+class BenchPlanSpec extends SparkSpec {
 
   private val refJson =
     """{"ref_round":"r15","mode":"per_query_min_over_three_interleaved_runs",
@@ -25,108 +23,32 @@ class BenchPlanSpec extends AnyFunSuite {
     assert(Bench.parseRefCosts("").isEmpty && Bench.parseRefRound("").isEmpty)
   }
 
-  test("medianCost: mid-pack default for queries the reference has never seen") {
-    assert(Bench.medianCost(Map.empty) == 1.0)
-    assert(Bench.medianCost(Map("a" -> 1.0, "b" -> 2.0, "c" -> 100.0)) == 2.0)
-  }
+  test("two passes: a failing query is null and out of the total, the other is timed twice, and both outputs parse") {
+    var okRuns = 0
+    val registry: Seq[(String, Bench.Query)] = Seq(
+      "q01_count" -> ((s, _) => { okRuns += 1; s.range(1000).toDF() }),
+      "q84_ann_pq" -> ((_, _) => throw new IllegalStateException("boom")))
+    val out = Files.createTempFile("bench_out", ".json")
+    // a quote and a backslash in the fixture path must not break either JSON
+    val sf = "/data/sf\"0.1\\x"
+    val stdout = new java.io.ByteArrayOutputStream()
+    Console.withOut(stdout)(Bench.run(spark, sf, registry, refJson, out))
 
-  test("cheapestFirst: reference cost ascending, name as tiebreak — the priced audits land LAST") {
-    val ref = Map("q10_x" -> 5.0, "q02_y" -> 0.1, "q03_z" -> 0.1, "q30_new" -> 1.0)
-    val order = Bench.cheapestFirst(
-      Seq("q10_x" -> (), "q30_new" -> (), "q03_z" -> (), "q02_y" -> ()),
-      n => ref(n)).map(_._1)
-    assert(order == Seq("q02_y", "q03_z", "q30_new", "q10_x"))
-    // no reference at all (constant cost) degrades to name order
-    val byName = Bench.cheapestFirst(
-      Seq("q10" -> (), "q02" -> (), "q30" -> ()), _ => 1.0).map(_._1)
-    assert(byName == Seq("q02", "q10", "q30"))
-  }
-
-  test("twoPassFits: the r15 driver box (10x slowdown, 552 s reference, 1320 s budget) must read single-pass") {
-    // builder box: 552 s suite, 1320 s budget — two passes fit
-    // (5 + 547 + 1.1*552 = 1159 <= 0.95*1320 = 1254)
-    assert(Bench.twoPassFits(elapsedS = 5, slowdown = 1.0,
-      refTotalS = 552, refObsS = 5, budgetS = 1320))
-    // a 1.5x-degraded box no longer fits two passes of the same suite
-    assert(!Bench.twoPassFits(elapsedS = 5, slowdown = 1.5,
-      refTotalS = 552, refObsS = 5, budgetS = 1320))
-    // the r15 driver box: ~10x slowdown — single-pass immediately
-    assert(!Bench.twoPassFits(elapsedS = 10, slowdown = 10.0,
-      refTotalS = 552, refObsS = 1, budgetS = 1320))
-  }
-
-  test("singlePassFits: the r16 driver box (5.7x, 520 s reference, 1320 s budget) cannot even single-pass") {
-    assert(Bench.singlePassFits(elapsedS = 5, slowdown = 1.0,
-      refTotalS = 520, refObsS = 5, budgetS = 1320))
-    // 5 + 5.7*(520-5) = 2940 > 1254 — the auto_fit tier must engage
-    assert(!Bench.singlePassFits(elapsedS = 5, slowdown = 5.7,
-      refTotalS = 520, refObsS = 5, budgetS = 1320))
-  }
-
-  test("budgetFitDeferrals: defers exactly the cheapest-first tail that does not fit; kept prefix then times completely") {
-    val remaining = Seq("a" -> 1.0, "b" -> 2.0, "c" -> 4.0, "d" -> 10.0)
-    // slowdown 2x, 20 s left of a 0.95*21.05≈20 s allowance:
-    // 2+4=6 fits, +8=14 fits, +20=34 does not → defer only "d"
-    assert(Bench.budgetFitDeferrals(remaining, elapsedS = 1.0,
-      slowdown = 2.0, budgetS = 22.1) == Seq("d"))
-    // ample budget → nothing deferred
-    assert(Bench.budgetFitDeferrals(remaining, elapsedS = 0.0,
-      slowdown = 1.0, budgetS = 1000.0).isEmpty)
-    // budget already exhausted → everything deferred (named, not
-    // silently skipped)
-    assert(Bench.budgetFitDeferrals(remaining, elapsedS = 50.0,
-      slowdown = 1.0, budgetS = 50.0) == Seq("a", "b", "c", "d"))
-    // the r16 driver shape: 5.7x box, 1320 s budget, a 520 s suite
-    // whose tail holds the priced audits — the kept prefix's
-    // predicted cost fits the allowance, and every deferred query is
-    // strictly more expensive than every kept one
-    val suite = (1 to 339).map(i => f"q$i%03d" -> (if (i <= 320) 0.5 else 8.0))
-    val deferred = Bench.budgetFitDeferrals(suite, elapsedS = 30.0,
-      slowdown = 5.7, budgetS = 1320.0)
-    val kept = suite.filterNot { case (n, _) => deferred.contains(n) }
-    assert(deferred.nonEmpty && kept.nonEmpty)
-    assert(30.0 + 5.7 * kept.map(_._2).sum <= 0.95 * 1320.0)
-    val keptMax = kept.map(_._2).max
-    assert(deferred.forall(n => suite.toMap.apply(n) >= keptMax))
-  }
-
-  test("packEntries: greedy prefix honors the char budget including commas; full-suite map packs ~130 entries into the tail window") {
-    // exact budget arithmetic: each entry costs length + 1 (comma/cursor)
-    val es = Seq("\"q1\":1.23", "\"q22\":0.5", "\"q333\":10.35")
-    assert(Bench.packEntries(es, 9 + 1) == es.take(1))
-    assert(Bench.packEntries(es, 9 + 1 + 9 + 1) == es.take(2))
-    assert(Bench.packEntries(es, 1000) == es)
-    assert(Bench.packEntries(es, 0).isEmpty)
-    // prefix semantics: a too-large head blocks the tail (most
-    // expensive first is the caller's contract — no cherry-picking
-    // cheap entries past an expensive one)
-    assert(Bench.packEntries(Seq("x" * 50, "\"q2\":1"), 20).isEmpty)
-    // the r18 driver-contract shape: 344 timed queries rendered as
-    // "qNN":s.ss, most expensive first, must fill a ~1500-char map
-    // budget with >= 100 entries and never exceed it
-    val suite = (1 to 344).map(i => s""""q$i":${(i % 19) + 1}.${i % 100}""")
-    val packed = Bench.packEntries(suite, 1500)
-    assert(packed.size >= 100)
-    assert(packed.map(_.length + 1).sum <= 1500)
-    assert(packed == suite.take(packed.size))
-  }
-
-  test("final bench line stays inside the driver's 2000-char tail window and json-parses with a non-empty queries map") {
-    // replicate main's finalLine shape with the r17 field inventory
-    // and prove the packed render obeys the window (the regression
-    // that blinded PERF two rounds: a final line with NO queries map)
-    def finalLine(qs: Seq[String], omitted: Int): String =
-      s"""{"metric":"total","value":397.656,"unit":"sec","mode":"min_interleaved_2_cf","n_timed":344,"n_queries":344,"obs_on_ref":361,"ref_sum":521.1,"ref_round":"r16","failed":[],"queries_omitted":$omitted,"queries":${qs.mkString("{", ",", "}")},"sf":"/root/testdata/sf0.1"}"""
-    val entries = (1 to 344).map(i => s""""q$i":${(i % 19) + 1}.${i % 100}""")
-    val packed = Bench.packEntries(entries, 1800 - finalLine(Nil, entries.size).length)
-    val line = finalLine(packed, entries.size - packed.size)
-    assert(line.length <= 1800)
-    assert(packed.size >= 100)
-    // real JSON parse (Jackson is on Spark's classpath): the last
-    // line alone must yield the non-empty per-query map
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
-    assert(node.get("metric").asText == "total")
-    assert(node.get("queries").size == packed.size && node.get("queries").size > 0)
-    assert(node.get("queries_omitted").asInt == 344 - packed.size)
+    assert(okRuns == 2)
+    val json = new ObjectMapper()
+    val last = json.readTree(stdout.toString("UTF-8").linesIterator.toSeq.last)
+    val file = json.readTree(Files.readString(out))
+    val queries = file.get("queries")
+    assert(queries.get("q84_ann_pq").isNull)
+    val okTime = queries.get("q01_count").asDouble
+    assert(okTime > 0)
+    for (node <- Seq(last, file)) {
+      assert(node.get("value").asDouble == okTime, "the failure's time must stay out of the total")
+      assert(node.get("n_timed").asInt == 1 && node.get("n_queries").asInt == 2)
+      assert(node.get("failed").size == 1 && node.get("failed").get(0).asText == "q84_ann_pq")
+      assert(node.get("sf").asText == sf)
+      assert(node.get("ref_round").asText == "r15" && node.get("ref_sum").asDouble == 0.1)
+    }
+    assert(last.get("queries") == null, "the per-query map goes to the file, not the summary line")
   }
 }

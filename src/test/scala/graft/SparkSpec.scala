@@ -3,19 +3,10 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all specs (one JVM, forked by sbt). */
+/** Shared local SparkSession for all specs (one JVM, forked by sbt):
+  * the mains' config at a fixed 4 cpus, whatever SPARK_GRAFT_CPUS says. */
 object SparkTestSession {
-  lazy val get: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val get: SparkSession = Session.local(cpus = 4)
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -1,11 +1,10 @@
 package graft.core
 
 import graft.{Database, SparkSpec}
+import graft.tools.Probe.jobsDuring
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
@@ -29,25 +28,6 @@ class SnapshotMemoSpec extends SparkSpec {
     assert(served.schema == fresh.schema,
       s"served ${served.schema.json}\nfresh  ${fresh.schema.json}")
     assert(served.orderBy(key).collect().toSeq == fresh.orderBy(key).collect().toSeq)
-  }
-
-  /** Names of the jobs submitted while `body` runs. The bus is drained
-    * before the listener is added (no earlier job leaks in) and before
-    * it is read (no job of `body` is missed). */
-  private def jobsDuring[T](body: => T): (T, Seq[String]) = {
-    val sc = spark.sparkContext
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        names.add(j.stageInfos.lastOption.map(_.name).getOrElse("?"))
-    }
-    Bridge.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      Bridge.drainListenerBus(sc)
-      (out, names.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
   }
 
   private val pk = new MetadataBuilder().putBoolean("primary_key", true).build()
@@ -137,7 +117,7 @@ class SnapshotMemoSpec extends SparkSpec {
     reader.write("u", (1L to 10L).toDF("id"))   // v1
     // the reader's memo now holds both versions' frames and file listings
     assert(reader.read("u").count() == 10L && reader.readVersion("u", 0).count() == 20L)
-    val (_, hitJobs) = jobsDuring(reader.read("u"))
+    val (_, hitJobs) = jobsDuring(spark)(reader.read("u"))
     assert(hitJobs.isEmpty, s"a memo hit runs no job: $hitJobs")
     assert(eraser.forgetWhere("u", col("id") % 2 === 0) == 10L + 5L)
     def ids(df: DataFrame) = df.as[Long].collect().sorted.toSeq
@@ -184,15 +164,15 @@ class SnapshotMemoSpec extends SparkSpec {
     val db = new Database(spark, newRoot())
     db.createTable("acct", Seq(ColumnSpec("id", LongType, nullable = false),
       ColumnSpec("amount", DoubleType)), primaryKey = Seq("id"))
-    val (_, upsertJobs) = jobsDuring(db.upsert("acct",
+    val (_, upsertJobs) = jobsDuring(spark)(db.upsert("acct",
       (1L to 200L).map(i => (i, i * 1.5)).toDF("id", "amount"), Seq("id")))
     // the listener must see the write's own jobs, or every bound below holds vacuously
     assert(upsertJobs.nonEmpty, "the listener recorded no job for the upsert")
-    val (_, readJobs) = jobsDuring(db.getTable("acct"))
+    val (_, readJobs) = jobsDuring(spark)(db.getTable("acct"))
     assert(readJobs.isEmpty, s"the first read of a fresh snapshot ran jobs: $readJobs")
-    val (_, deleteJobs) = jobsDuring(db.delete("acct", Seq(Pred.Op("id", "<", 10L))))
+    val (_, deleteJobs) = jobsDuring(spark)(db.delete("acct", Seq(Pred.Op("id", "<", 10L))))
     assert(deleteJobs.nonEmpty, "the listener recorded no job for the delete")
-    val (n, updateJobs) = jobsDuring(db.update("acct",
+    val (n, updateJobs) = jobsDuring(spark)(db.update("acct",
       (5L to 30L).map(i => (i, -1.0)).toDF("id", "amount"), Seq("id")))
     assert(n == 21L)
     assert(updateJobs.size <= deleteJobs.size + 2,
