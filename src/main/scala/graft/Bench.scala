@@ -48,12 +48,13 @@ object Bench {
     spark.stop()
   }
 
-  /** The two timed passes over `queries`; writes the summary plus the
-    * per-query map to `out`, then prints the summary line. */
-  private[graft] def run(spark: SparkSession, sfDir: String, queries: Seq[(String, Query)],
-      refText: String, out: Path): Unit = {
+  /** The protocol's two interleaved passes over `queries` on `sfDir`:
+    * each query's min-of-two seconds. A query that fails is logged,
+    * not run again, and left out of the map. */
+  def time(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, Query)]): Map[String, Double] = {
     val best = scala.collection.mutable.Map.empty[String, Double]
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    val failed = scala.collection.mutable.Set.empty[String]
     // the guard is checked as each query comes up: one that failed in
     // pass 1 is not run again
     for (_ <- 1 to 2; (name, fn) <- queries if !failed(name)) {
@@ -71,7 +72,15 @@ object Bench {
       // signatures etc.) so memory stays flat across the suite
       spark.catalog.clearCache()
     }
+    best.toMap
+  }
 
+  /** [[time]] over `queries`; writes the summary plus the per-query map
+    * to `out`, then prints the summary line. */
+  private[graft] def run(spark: SparkSession, sfDir: String, queries: Seq[(String, Query)],
+      refText: String, out: Path): Unit = {
+    val best = time(spark, sfDir, queries)
+    val failed = queries.map(_._1).filterNot(best.contains)
     val ref = parseRefCosts(refText)
     val timed = queries.collect { case (n, _) if best.contains(n) => n -> best(n) }
     val onRef = timed.filter { case (n, _) => ref.contains(n) }
@@ -87,7 +96,7 @@ object Bench {
       "obs_on_ref" -> num(onRef.map(_._2).sum, 1),
       "ref_sum" -> num(onRef.map { case (n, _) => ref(n) }.sum, 1),
       "ref_round" -> Json.str(parseRefRound(refText).getOrElse("none")),
-      "failed" -> failed.toSeq.map(Json.str).mkString("[", ",", "]"),
+      "failed" -> failed.map(Json.str).mkString("[", ",", "]"),
       "sf" -> Json.str(sfDir))
     val perQuery = queries.map { case (n, _) => n -> best.get(n).fold("null")(num(_, 3)) }
     Files.writeString(out, obj(summary :+ ("queries" -> obj(perQuery))))

@@ -370,7 +370,8 @@ final class TableStore(spark: SparkSession, root: String,
     * the storage-level filter for 100 TB tables. `maxRecordsPerFile`
     * caps rows per output file (0 = Spark default): the small-files /
     * giant-files guard — a 100 TB snapshot wants ~128 MB-to-1 GB files,
-    * not one file per shuffle partition of arbitrary size. */
+    * not one file per shuffle partition of arbitrary size. Returns the
+    * version this write committed. */
   /** CRASH-SAFETY PROTOCOL (every kill window is spec-pinned in
     * TableStoreCrashSpec; the two steps that NEED atomicity go
     * through the [[AtomicOps]] seam, which names where that atomicity
@@ -403,7 +404,7 @@ final class TableStore(spark: SparkSession, root: String,
     * the `_SWAPPED` breadcrumb: once any swap has landed, a missing
     * pointer refuses loudly instead of promoting a phantom). */
   def write(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
-      maxRecordsPerFile: Long = 0L): Unit = {
+      maxRecordsPerFile: Long = 0L): Int = {
     val basedOn = currentVersion(name)
     // the fence watches the RAW pointer: before the first-ever swap it
     // is None even when the fallback recovers a committed dir, and our
@@ -470,6 +471,7 @@ final class TableStore(spark: SparkSession, root: String,
       fs.listStatus(tableDir(name)).toSeq.filter(_.isFile)
         .map(_.getPath).filter(_.getName.startsWith("_LATEST.tmp"))
         .foreach(p => fs.delete(p, false))
+      next
     } finally fs.delete(claimFile(name, next), false)
   }
 
@@ -572,7 +574,7 @@ final class TableStore(spark: SparkSession, root: String,
         .localCheckpoint(true)
       removed += before - keep.count()
       keep.write.mode("overwrite").parquet(snapshotDir(name, v).toString)
-      keep.unpersist()
+      graft.util.Caches.release(keep)
       // erasure is the ONE in-place rewrite of committed history: every
       // instance's memoized frame of `v` (its bound file listing) is
       // stale now, so bump the marker their memo reads compare against

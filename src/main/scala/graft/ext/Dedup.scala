@@ -144,6 +144,19 @@ object Dedup {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
+  /** An operator's result plus the caches it created behind it — the
+    * one ownership shape of the near-dup operators. `release()` frees
+    * exactly those caches through [[graft.util.Caches.release]]. Call
+    * it only AFTER the result has been materialized (written or
+    * collected): the result plan reads the caches, so releasing first
+    * recomputes their sources (and a released checkpoint has nothing
+    * left to recompute from). A long-lived session that skips it keeps
+    * the caches until `spark.catalog.clearCache()`, which evicts every
+    * cache in the session. */
+  final case class Owned(result: DataFrame, caches: Seq[DataFrame]) {
+    def release(): Unit = caches.foreach(graft.util.Caches.release)
+  }
+
   /** INCREMENTAL exact dedup: keep only `batch` rows whose normalized
     * content fingerprint ([[TextOps.fingerprintMd5]]) is absent from
     * `corpus` — the arriving-batch-vs-existing-corpus shape a
@@ -167,52 +180,17 @@ object Dedup {
     * the batch twice (both union branches) — without the persists each
     * would re-scan and re-fingerprint its source per consumer, doubling
     * the dominant cost at corpus scale. The persisted fingerprint set
-    * is 32 bytes/doc (spills fine); after materializing the result,
-    * release exactly these two caches via
-    * [[incrementalExactReleasable]]'s `release()` handle — a long-lived
-    * ingest loop calling this per batch would otherwise accumulate two
-    * cache entries per batch (and `spark.catalog.clearCache()` is a
-    * sledgehammer that evicts every cache in the session).
+    * is 32 bytes/doc (spills fine). The returned [[Owned]] holds these
+    * two caches: an ingest loop calls `release()` once per batch, after
+    * materializing the result, and the session cache stays flat.
     *
     * NULL-text batch rows are KEPT unconditionally: their fingerprint
     * is NULL, which matches nothing — a missing document cannot be a
     * known duplicate. Filter or repair NULLs upstream if they should
     * not survive ingest. */
-  def incrementalExact(batch: DataFrame, corpus: DataFrame, textCol: String,
-      bloomBits: Int = AutoBloomBits, seed: Long = 42L): DataFrame =
-    incrementalExactReleasable(batch, corpus, textCol, bloomBits, seed).result
-
-  /** Sentinel: size the bloom gate from the measured corpus-fingerprint
-    * count (the default). A FIXED bit width silently saturates as the
-    * corpus grows — at <~4 bits/key nearly every novel row turns
-    * "maybe-duplicate" and the operator degrades to the full anti-join
-    * it exists to avoid (no correctness loss, total performance loss). */
-  val AutoBloomBits: Int = 0
-
-  /** Auto-sizing policy: next power of two ≥ 10 bits/key (FP ≈ 0.9 % at
-    * 5 hashes), floor 2^20, capped at `maxBloomBits` — the cap bounds
-    * the literal bitmap that ships inside the probe expression (2^24
-    * bits = 2 MiB, the broadcast-variable budget BloomJoin documents). */
-  private[ext] def autoBloomBits(corpusKeys: Long, maxBloomBits: Int): Int = {
-    val want = math.max(1L << 20, corpusKeys * 10L)
-    val pow2 = java.lang.Long.highestOneBit(want)
-    val bits = if (pow2 == want) want else pow2 << 1
-    math.min(bits, maxBloomBits.toLong).toInt
-  }
-
-  /** The result of an incremental dedup plus a `release()` handle that
-    * unpersists exactly the two fingerprint caches the operator
-    * created (batch + corpus). Call `release()` only AFTER the result
-    * has been materialized (written/collected) — the result plan reads
-    * both caches, so releasing first re-fingerprints both sources. */
-  final case class IncrementalDedup(result: DataFrame, release: () => Unit)
-
-  /** [[incrementalExact]] with cache ownership handed to the caller —
-    * the variant a long-lived ingest loop should use (one `release()`
-    * per batch keeps the session cache flat). */
   def incrementalExactReleasable(batch: DataFrame, corpus: DataFrame,
       textCol: String, bloomBits: Int = AutoBloomBits,
-      seed: Long = 42L, maxBloomBits: Int = 1 << 24): IncrementalDedup = {
+      seed: Long = 42L, maxBloomBits: Int = 1 << 24): Owned = {
     import graft.operators.BloomJoin
     import org.apache.spark.storage.StorageLevel
     val fp = TextOps.fingerprintMd5(col(textCol))
@@ -235,8 +213,25 @@ object Dedup {
       .unionByName(batchFp.filter(maybeDup)
         .join(corpusFp, Seq("__fp"), "left_anti"))
       .drop("__fp")
-    IncrementalDedup(result,
-      () => { batchFp.unpersist(); corpusFp.unpersist(); () })
+    Owned(result, Seq(batchFp, corpusFp))
+  }
+
+  /** Sentinel: size the bloom gate from the measured corpus-fingerprint
+    * count (the default). A FIXED bit width silently saturates as the
+    * corpus grows — at <~4 bits/key nearly every novel row turns
+    * "maybe-duplicate" and the operator degrades to the full anti-join
+    * it exists to avoid (no correctness loss, total performance loss). */
+  val AutoBloomBits: Int = 0
+
+  /** Auto-sizing policy: next power of two ≥ 10 bits/key (FP ≈ 0.9 % at
+    * 5 hashes), floor 2^20, capped at `maxBloomBits` — the cap bounds
+    * the literal bitmap that ships inside the probe expression (2^24
+    * bits = 2 MiB, the broadcast-variable budget BloomJoin documents). */
+  private[ext] def autoBloomBits(corpusKeys: Long, maxBloomBits: Int): Int = {
+    val want = math.max(1L << 20, corpusKeys * 10L)
+    val pow2 = java.lang.Long.highestOneBit(want)
+    val bits = if (pow2 == want) want else pow2 << 1
+    math.min(bits, maxBloomBits.toLong).toInt
   }
 
   /** Keep-latest-per-key (the streaming analogue of the reference's
@@ -548,31 +543,16 @@ object Dedup {
     var useShortcut = shortcut
     // salted propagation: the edge side hashes dst into k buckets, the
     // label side replicates into every bucket — the hot src key's rows
-    // land on k tasks instead of one (see saltBuckets scaladoc).
-    // The salted edge frame is persisted PRE-PARTITIONED on the join
-    // keys (src, __salt) (r18, guide §2.4): the per-round propagation
-    // join then reads the cache's partitioning instead of re-shuffling
-    // the whole edge list every round — the hot src still spreads k
-    // ways because the salt derives from dst, so the deterministic
-    // skew protection is intact; only the (small, per-round) label
-    // side pays an exchange. Unsalted loops keep both sides as fresh
-    // shuffles ON PURPOSE: that shape is what lets AQE's in-loop
-    // skew-split fire (CcSkewSpec), the protection the AutoSalt
-    // arbitration stands the salt down for.
+    // land on k tasks instead of one (see saltBuckets scaladoc)
     val saltCols = if (resolvedSalt > 1)
       Some(array((0 until resolvedSalt).map(lit): _*)) else None
-    val saltedSym = saltCols.map { _ =>
-      sym.withColumn("__salt",
-          pmod(xxhash64(col("dst")), lit(resolvedSalt.toLong)))
-        .repartition(col("src"), col("__salt"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    }
     while (!done && it < maxIter) {
       if (!useShortcut && autoShortcutAfter > 0 && it >= autoShortcutAfter)
         useShortcut = true
       val prop0 = saltCols match {
         case Some(buckets) =>
-          val symS = saltedSym.get
+          val symS = sym.withColumn("__salt",
+            pmod(xxhash64(col("dst")), lit(resolvedSalt.toLong)))
           val labS = labels.withColumn("__salt", explode(buckets))
           symS.join(labS, symS("src") === labS("id") &&
               symS("__salt") === labS("__salt").cast("long"))
@@ -629,8 +609,7 @@ object Dedup {
       it += 1
     }
     if (!done) {
-      sym.unpersist(); saltedSym.foreach(_.unpersist())
-      labelsCache.unpersist(); eFlagged.unpersist()
+      sym.unpersist(); labelsCache.unpersist(); eFlagged.unpersist()
       active.unpersist()
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds — " +
@@ -650,7 +629,6 @@ object Dedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
     out.count()
     sym.unpersist()
-    saltedSym.foreach(_.unpersist())
     labelsCache.unpersist()
     eFlagged.unpersist()
     active.unpersist()
@@ -703,8 +681,8 @@ object Dedup {
   /** End-to-end near-dup REMOVAL: cluster the pair evidence with
     * [[connectedComponents]] and keep each cluster's minimum-PRESENT
     * row — the step every curation pipeline runs after candidate
-    * generation (pairs from minhashNearDups / simhashNearDups /
-    * winnowingNearDups / embeddingNearDups all fit).
+    * generation (pairs from minhashNearDupsReleasable /
+    * simhashNearDups / winnowingNearDups / embeddingNearDups all fit).
     *
     * The CC node set is seeded with the pair ENDPOINTS as well as the
     * doc ids: stale pair evidence may reference an id absent from
@@ -782,8 +760,8 @@ object Dedup {
       idCol, k, portable)
 
   /** Signature aggregation over an existing (id, shingle) frame — split
-    * out so [[minhashNearDups]] can feed the SAME shingle pass to both
-    * the signatures and the verification sets. min() is
+    * out so [[minhashNearDupsReleasable]] can feed the SAME shingle
+    * pass to both the signatures and the verification sets. min() is
     * multiplicity-invariant, so no shingle dedup is needed. */
   private[ext] def minhashSignatureFromRows(sh: DataFrame, idCol: String,
       k: Int, portable: Boolean): DataFrame = {
@@ -926,7 +904,7 @@ object Dedup {
     * "Two docs are near-dups when they share most of their word MASS"
     * — the form that sees a doc which repeats its boilerplate header
     * fifty times as different from one that mentions it once, which
-    * set-Jaccard ([[minhashNearDups]]) cannot. The classic
+    * set-Jaccard ([[minhashNearDupsReleasable]]) cannot. The classic
     * consistent-weighted-sampling constructions (Ioffe 2010) need
     * log/exp — not correctly rounded cross-engine — so this takes the
     * INTEGER-REPLICATION construction instead: word w with capped
@@ -945,7 +923,7 @@ object Dedup {
     *
     * `shingleN` picks the weighted element basis: 1 = word tf (the
     * textbook weighted-Jaccard form), ≥2 = word-n-gram tf. The
-    * DEFAULT is 3 (matching [[minhashNearDups]]): raw word mass
+    * DEFAULT is 3 (matching [[minhashNearDupsReleasable]]): raw word mass
     * (n = 1) is dominated by common/stop words on natural-language
     * corpora, which DEGENERATES the signatures — the globally minimal
     * common-word replica becomes most docs' minimum, band buckets
@@ -963,32 +941,18 @@ object Dedup {
     * and far below the degenerate collapse.
     *
     * Caches: the per-doc tf frame is persisted (it feeds the replica
-    * expansion AND both verify joins). This convenience form leaves
-    * it cached behind the returned lazy frame — a long-lived session
-    * computing many passes should use
-    * [[weightedMinhashNearDupsReleasable]] and call `release()` after
-    * materializing the result, or `spark.catalog.clearCache()`.
+    * expansion AND both verify joins), and so are the candidate pairs
+    * (see the inline note); the returned [[Owned]] holds both.
     *
     * @note BREAKING DEFAULT CHANGE (since r14): `shingleN` default
     *       moved 1 → 3. Callers who relied on the r13 word-tf default
     *       get different (n-gram-mass) results and must pass
     *       `shingleN = 1` explicitly — which also opts into the
     *       degenerate-basis tripwire pricing described above. */
-  def weightedMinhashNearDups(docs: DataFrame, idCol: String,
-      textCol: String, thresholdPpm: Long = 500000L, k: Int = 16,
-      bands: Int = 4, weightCap: Int = 8, shingleN: Int = 3,
-      maxBucketSize: Int = 10000): DataFrame =
-    weightedMinhashNearDupsReleasable(docs, idCol, textCol, thresholdPpm,
-      k, bands, weightCap, shingleN, maxBucketSize).result
-
-  /** [[weightedMinhashNearDups]] with cache ownership handed to the
-    * caller: `release()` (AFTER materializing the result) drops the
-    * per-doc tf cache this call created — the variant for long-lived
-    * sessions computing many weighted passes. */
   def weightedMinhashNearDupsReleasable(docs: DataFrame, idCol: String,
       textCol: String, thresholdPpm: Long = 500000L, k: Int = 16,
       bands: Int = 4, weightCap: Int = 8, shingleN: Int = 3,
-      maxBucketSize: Int = 10000): IncrementalDedup = {
+      maxBucketSize: Int = 10000): Owned = {
     require(weightCap >= 1, s"weightCap must be >= 1, got $weightCap")
     require(shingleN >= 1, s"shingleN must be >= 1, got $shingleN")
     require(maxBucketSize >= 2,
@@ -1014,8 +978,9 @@ object Dedup {
     // final join, inside the caller's one materializing action —
     // unpersisted, the signature aggregate (k min-hashes over the
     // tf-expanded element stream, the expensive half) and the banded
-    // self-join replay once per consumer (r18; the minhashNearDups
-    // persist-the-signatures precedent). Pair lists are dedup-small.
+    // self-join replay once per consumer (r18; the
+    // minhashNearDupsReleasable persist-the-signatures precedent). Pair
+    // lists are dedup-small.
     val cand = lshCandidatesGuarded(sig, idCol, k, bands, portable = true,
       maxBucketSize = maxBucketSize)
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1037,7 +1002,7 @@ object Dedup {
           .otherwise(PortableDiv.nonNeg(lit(1000000L) * col("__i"), denom))
           .as("jw_ppm"))
       .filter(col("jw_ppm") >= thresholdPpm)
-    IncrementalDedup(result, () => { tf.unpersist(); cand.unpersist(); () })
+    Owned(result, Seq(tf, cand))
   }
 
   /** Full MinHash+LSH near-dup pipeline: signature → banding → candidate
@@ -1049,24 +1014,12 @@ object Dedup {
     * the verification shingle sets (r7) — at corpus scale the explode
     * over the token stream is the dominant per-row cost, and composing
     * `minhashSignature` with `jaccardVerify` pays it twice. The shingle
-    * rows and signatures stay persisted behind the returned (lazy)
-    * frame; a long-lived session should release them via
-    * `spark.catalog.clearCache()` or by composing the pieces manually. */
-  def minhashNearDups(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, k: Int = 32, bands: Int = 8,
-      shingleN: Int = 3, portable: Boolean = false): DataFrame =
-    minhashNearDupsReleasable(docs, idCol, textCol, threshold, k, bands,
-      shingleN, portable).result
-
-  /** [[minhashNearDups]] with cache ownership handed to the caller:
-    * `release()` (AFTER materializing the result) drops exactly the
-    * shingle-row and signature caches this call created — the variant
-    * for long-lived sessions computing many near-dup passes
-    * (DatasetCard uses it). */
+    * rows and signatures are persisted behind the returned lazy frame;
+    * the returned [[Owned]] holds both caches. */
   def minhashNearDupsReleasable(docs: DataFrame, idCol: String,
       textCol: String, threshold: Double = 0.8, k: Int = 32,
       bands: Int = 8, shingleN: Int = 3,
-      portable: Boolean = false): IncrementalDedup = {
+      portable: Boolean = false): Owned = {
     val sh = TextOps.shingleRows(docs.repartition(col(idCol)), idCol, textCol, shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sig = minhashSignatureFromRows(sh, idCol, k, portable)
@@ -1079,15 +1032,15 @@ object Dedup {
       .withColumn("jaccard", jaccardCol(col("__sa"), col("__sb")))
       .select(col("a"), col("b"), col("jaccard"))
       .filter(col("jaccard") >= threshold)
-    IncrementalDedup(result, () => { sh.unpersist(); sig.unpersist(); () })
+    Owned(result, Seq(sh, sig))
   }
 
   /** Incremental NEAR-dup: which arriving batch docs are near-duplicates
     * (Jaccard ≥ threshold) of the EXISTING corpus — the LSH analogue of
-    * [[incrementalExact]] for an ingest loop, catching light rewrites
-    * that content fingerprints miss. Returns CROSS-SET pairs only,
-    * (a = batch id, b = corpus id, jaccard); batch-internal duplicates
-    * are [[minhashNearDups]] on the batch alone.
+    * [[incrementalExactReleasable]] for an ingest loop, catching light
+    * rewrites that content fingerprints miss. Returns CROSS-SET pairs
+    * only, (a = batch id, b = corpus id, jaccard); batch-internal
+    * duplicates are [[minhashNearDupsReleasable]] on the batch alone.
     *
     * Scale shape: signatures are computed per side with the SAME seeded
     * hash family, so a long-lived ingest loop should precompute the
@@ -1095,12 +1048,14 @@ object Dedup {
     * batch — the per-batch cost is then one signature pass over the
     * (small) batch plus a banded equi-join in which the batch side's
     * band rows broadcast (AQE decides). Never all-pairs: a batch doc
-    * meets only corpus docs sharing a band bucket. */
+    * meets only corpus docs sharing a band bucket. The returned
+    * [[Owned]] holds the batch-shingle cache and the candidate
+    * checkpoint (see [[incrementalNearDupsWithSigsReleasable]]). */
   def incrementalNearDups(batch: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, threshold: Double = 0.8,
       k: Int = 32, bands: Int = 8, shingleN: Int = 3,
-      portable: Boolean = false): DataFrame =
-    incrementalNearDupsWithSigs(batch,
+      portable: Boolean = false): Owned =
+    incrementalNearDupsWithSigsReleasable(batch,
       minhashSignature(corpus, idCol, textCol, k, shingleN, portable),
       corpus, idCol, textCol, threshold, k, bands, shingleN, portable)
 
@@ -1109,28 +1064,20 @@ object Dedup {
     * once, persist it, call this per batch; `Streams.nearDupIngest`
     * wires it into foreachBatch). The per-batch cost is one batch
     * shingle pass + the banded cross-set join + candidate-restricted
-    * corpus re-shingling for exact verification. */
-  def incrementalNearDupsWithSigs(batch: DataFrame, corpusSigs: DataFrame,
-      corpus: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, k: Int = 32, bands: Int = 8,
-      shingleN: Int = 3, portable: Boolean = false): DataFrame =
-    incrementalNearDupsWithSigsReleasable(batch, corpusSigs, corpus,
-      idCol, textCol, threshold, k, bands, shingleN, portable).result
-
-  /** [[incrementalNearDupsWithSigs]] with a `release()` handle for the
-    * epoch's batch-shingle cache — the form an ingest LOOP must use
-    * (`Streams.nearDupIngest` releases per epoch; without it a
-    * long-running stream accumulates one cache entry per micro-batch
-    * forever). Release only after the epoch's result is materialized. */
+    * corpus re-shingling for exact verification. The returned
+    * [[Owned]] holds the epoch's batch-shingle cache and candidate
+    * checkpoint: an ingest LOOP calls `release()` once per epoch, after
+    * the epoch's result is materialized — without it a long-running
+    * stream accumulates cache entries per micro-batch forever. */
   def incrementalNearDupsWithSigsReleasable(batch: DataFrame,
       corpusSigs: DataFrame, corpus: DataFrame, idCol: String,
       textCol: String, threshold: Double = 0.8, k: Int = 32,
       bands: Int = 8, shingleN: Int = 3,
-      portable: Boolean = false): IncrementalDedup = {
+      portable: Boolean = false): Owned = {
     // The BATCH side shares one shingle pass between its signatures
-    // and its verification sets (the minhashNearDups r7 recipe — the
-    // batch is the small arriving set, so persisting its shingle rows
-    // is cheap and saves a full tokenize+explode). The CORPUS side
+    // and its verification sets (the minhashNearDupsReleasable r7
+    // recipe — the batch is the small arriving set, so persisting its
+    // shingle rows is cheap and saves a full tokenize+explode). The CORPUS side
     // deliberately does NOT: persisting the 100 TB corpus' exploded
     // shingle rows to save re-shingling the candidate SLIVER would be
     // a catastrophic trade — it keeps the signature pass + candidate-
@@ -1145,8 +1092,8 @@ object Dedup {
     // lineage each consumer would replay BOTH signature pipelines. The
     // frame is id pairs only — tiny — but the checkpoint RDD sits in
     // the persistent-RDD registry until the ContextCleaner happens to
-    // GC it, so release() below drops it explicitly (an ingest loop
-    // can't wait for GC).
+    // GC it, so release() drops it explicitly (an ingest loop can't
+    // wait for GC).
     val cand = lshCandidatesAcross(bs, cs, idCol, k, bands, portable)
       .localCheckpoint(true)
     val setsA = shB
@@ -1163,22 +1110,8 @@ object Dedup {
       .withColumn("jaccard", jaccardCol(col("__sa"), col("__sb")))
       .select(col("a"), col("b"), col("jaccard"))
       .filter(col("jaccard") >= threshold)
-    IncrementalDedup(result,
-      () => { shB.unpersist(); releaseCheckpoint(cand); () })
+    Owned(result, Seq(shB, cand))
   }
-
-  /** Unpersist the block-backed RDD behind a locally-checkpointed
-    * frame. `localCheckpoint` registers its RDD as persistent until the
-    * ContextCleaner GCs the last reference — too lazy for an ingest
-    * loop that must keep the cache registry flat per epoch. The frame
-    * must not be consumed again afterwards (lineage is truncated, so
-    * there is nothing to recompute from). */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** Cross-set exact-Jaccard verification: candidates carry (a = id in
     * `left`, b = id in `right`); each side's shingle sets come from its
@@ -1365,7 +1298,7 @@ object Dedup {
     * is calibrated before trusting bands at corpus scale.
     *
     * ONE tokenize+shingle pass feeds signatures AND exact verification
-    * (the [[minhashNearDups]] sharing rule); match counting is k
+    * (the [[minhashNearDupsReleasable]] sharing rule); match counting is k
     * codegen'd comparisons, each Jaccard one integer division. */
   def minhashCalibration(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 16, bands: Int = 4, shingleN: Int = 3,
@@ -2041,7 +1974,7 @@ object Dedup {
     * a full crawl corpus is exactly the explosion the production
     * pipelines df-gate away). Candidates = [[lshCandidates]] over the
     * same signatures. ONE tokenize+shingle pass feeds truth AND
-    * signatures (the minhashNearDups sharing rule). Returns ONE row:
+    * signatures (the minhashNearDupsReleasable sharing rule). Returns ONE row:
     * (n_truth, n_candidates, n_hit, recall_ppm, precision_ppm) —
     * floor ppm; NULL when the respective denominator is 0.
     *

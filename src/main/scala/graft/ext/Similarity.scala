@@ -778,15 +778,6 @@ object Similarity {
     topKPerQuery(reranked, col("nn_id"), col("cosine"), "cosine", k)
   }
 
-  /** Newest committed snapshot version of `table` — what a store
-    * write that just returned produced (the store's pointer swap is
-    * the commit, so `versions.max` IS the new version). */
-  private def latestV(store: graft.core.TableStore, table: String): Int = {
-    val vs = store.versions(table)
-    require(vs.nonEmpty, s"index table $table has no committed snapshot")
-    vs.max
-  }
-
   /** Commit the index GROUP: one manifest row naming the exact
     * (encoded, centroids, books) version TRIPLE, written as its own
     * TableStore version — always LAST, after every member table's
@@ -823,19 +814,16 @@ object Similarity {
       name: String): Unit = {
     implicit val spark: SparkSession = index.encoded.sparkSession
     import spark.implicits._
-    store.write(s"${name}_encoded", index.encoded)
+    val encV = store.write(s"${name}_encoded", index.encoded)
     // constants-sized tables (C rows / 1 row): one file each — writing
     // them at the session's shuffle parallelism would scatter a
     // 16-row table over 32 mostly-empty files per version
-    store.write(s"${name}_centroids", index.centroids.coalesce(1))
-    store.write(s"${name}_books", Seq((
+    val cenV = store.write(s"${name}_centroids", index.centroids.coalesce(1))
+    val bkV = store.write(s"${name}_books", Seq((
       index.books.dim, index.books.m, index.books.ksub,
       index.books.books.map(_.map(_.toSeq).toSeq).toSeq))
       .toDF("dim", "m", "ksub", "books").coalesce(1))
-    commitIndexManifest(store, name,
-      latestV(store, s"${name}_encoded"),
-      latestV(store, s"${name}_centroids"),
-      latestV(store, s"${name}_books"))
+    commitIndexManifest(store, name, encV, cenV, bkV)
   }
 
   /** The (encoded_v, centroids_v, books_v) triple a manifest version
@@ -953,9 +941,8 @@ object Similarity {
     // batch id set broadcasts; the codes scan never shuffles)
     val retained = cur.encoded.join(
       broadcast(appended.select(col("__id"))), Seq("__id"), "left_anti")
-    store.write(s"${name}_encoded", retained.union(appended))
-    commitIndexManifest(store, name,
-      latestV(store, s"${name}_encoded"), cenV, bkV)
+    val encV = store.write(s"${name}_encoded", retained.union(appended))
+    commitIndexManifest(store, name, encV, cenV, bkV)
   }
 
   /** Right-to-be-forgotten for the INDEX (r16 verdict item 2 — the
@@ -1011,7 +998,7 @@ object Similarity {
     val kept = mvs.takeRight(keepLast)
     val triples = kept.map(mv => ivfPqManifest(store, name, Some(mv)))
     def expireBelow(member: String, minRef: Int): Seq[Int] = {
-      val latest = latestV(store, s"$name$member")
+      val latest = store.versions(s"$name$member").max
       store.expireVersions(s"$name$member", keepLast = latest - minRef + 1)
     }
     Map(

@@ -403,9 +403,9 @@ private[graft] object QueriesCore {
     // banding, candidate join, Jaccard verify) is replayed by the
     // DuckDB oracle — md5-derived 60-bit hashes are engine-identical.
     "q45_minhash_neardup" -> ((s, d) =>
-      Dedup.minhashNearDups(T(s, d, "documents"), "doc_id", "text",
+      Dedup.minhashNearDupsReleasable(T(s, d, "documents"), "doc_id", "text",
         threshold = 0.5, k = 16, bands = 4, shingleN = 3, portable = true)
-        .orderBy(col("a"), col("b"))),
+        .result.orderBy(col("a"), col("b"))),
 
     // Portable-hash mode: DuckDB replays the 60-bit SimHash (per-bit
     // vote sums, sign fold, 4×15-bit banding, Hamming verify).
@@ -422,10 +422,10 @@ private[graft] object QueriesCore {
     // expansion, the 2-universal signatures, the banding, and the
     // exact Σmin/(Σa+Σb−Σmin) ppm.
     "q333_weighted_minhash" -> ((s, d) =>
-      Dedup.weightedMinhashNearDups(T(s, d, "documents"), "doc_id",
+      Dedup.weightedMinhashNearDupsReleasable(T(s, d, "documents"), "doc_id",
         "text", thresholdPpm = 500000L, k = 16, bands = 4,
         weightCap = 8, shingleN = 3)
-        .orderBy(col("a"), col("b"))),
+        .result.orderBy(col("a"), col("b"))),
 
     // ----------------------------------------------------- similarity search
     "q47_embed_neardup" -> ((s, d) => {

@@ -1727,7 +1727,7 @@ private[graft] object QueriesCuration {
         .orderBy(col("c_mktsegment"))
     }),
 
-    // Incremental dedup (ext.Dedup.incrementalExact): new docs plus
+    // Incremental dedup (ext.Dedup.incrementalExactReleasable): new docs plus
     // resubmissions of corpus content under fresh ids — the
     // resubmissions must be dropped by content fingerprint even though
     // their ids are novel; the bloom split must not drop novel docs.
@@ -1741,8 +1741,8 @@ private[graft] object QueriesCuration {
       // needs; the API default (2^20) would embed a 16K-long literal
       // per union branch for a fixture-sized corpus — same result,
       // heavier plan
-      Dedup.incrementalExact(batch, corpus, "text", bloomBits = 1 << 16)
-        .select(col("doc_id"), col("lang"))
+      Dedup.incrementalExactReleasable(batch, corpus, "text", bloomBits = 1 << 16)
+        .result.select(col("doc_id"), col("lang"))
         .orderBy(col("doc_id"))
     }),
 
@@ -1820,7 +1820,7 @@ private[graft] object QueriesCuration {
           .withColumn("text", regexp_replace(col("text"), "^[^ ]+ ", "")))
       Dedup.incrementalNearDups(batch, corpus, "doc_id", "text",
         threshold = 0.5, k = 16, bands = 4, shingleN = 3, portable = true)
-        .orderBy(col("a"), col("b"))
+        .result.orderBy(col("a"), col("b"))
     })
   )
 

@@ -65,7 +65,8 @@ private[graft] object QueryHelpers {
   /** DuckDB replay of the portable MinHash+LSH pipeline (k=16, 4 bands
     * of 4, 3-gram shingles, 2-universal double hashing h_i = a + i·b
     * over the md5 56-bit halves, jaccard ≥ 0.5) — mirrors
-    * `Dedup.minhashNearDups(..., portable = true)` hash for hash. */
+    * `Dedup.minhashNearDupsReleasable(..., portable = true).result`
+    * hash for hash. */
   private[graft] val MinhashOracleSql: String = {
     val k = 16; val bands = 4; val r = k / bands
     val hCols = (0 until k).map(i => s"min(ha + $i * hb) AS h$i").mkString(",\n    ")
@@ -107,7 +108,8 @@ private[graft] object QueryHelpers {
     * the same 2-universal signature family and banding as
     * [[MinhashOracleSql]], and the exact Σmin/(Σa+Σb−Σmin) weighted
     * Jaccard in floor ppm — mirrors
-    * `Dedup.weightedMinhashNearDups(k=16, bands=4, weightCap=8, shingleN=3)`. */
+    * `Dedup.weightedMinhashNearDupsReleasable(k=16, bands=4, weightCap=8,
+    * shingleN=3).result`. */
   private[graft] val WeightedMinhashOracleSql: String = {
     val k = 16; val bands = 4; val r = k / bands; val cap = 8
     val hCols = (0 until k).map(i => s"min(ha + $i * hb) AS h$i").mkString(",\n    ")
@@ -162,7 +164,7 @@ private[graft] object QueryHelpers {
     * rewrites of corpus docs under offset ids), per-side signatures with
     * the same 2-universal family, banded candidates restricted to
     * batch × corpus, exact-Jaccard verify ≥ 0.5 — mirrors
-    * `Dedup.incrementalNearDups(..., portable = true)`. */
+    * `Dedup.incrementalNearDups(..., portable = true).result`. */
   private[graft] val IncrementalMinhashOracleSql: String = {
     val k = 16; val bands = 4; val r = k / bands
     val hCols = (0 until k).map(i => s"min(ha + $i * hb) AS h$i").mkString(",\n    ")

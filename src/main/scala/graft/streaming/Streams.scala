@@ -287,17 +287,6 @@ object Streams {
       .start()
   }
 
-  /** One epoch of [[nearDupIngest]]: batch signatures → banded
-    * cross-set candidate join against the precomputed corpus
-    * signatures → exact-Jaccard verify. Exposed for direct use (and so
-    * StreamsSpec can plan-check the epoch: the corpus side of the
-    * candidate join must be an InMemoryTableScan of `corpusSigs`). */
-  def nearDupIngestBatch(batch: DataFrame, corpusSigs: DataFrame,
-      corpus: DataFrame, idCol: String, textCol: String, threshold: Double,
-      k: Int, bands: Int, shingleN: Int, portable: Boolean): DataFrame =
-    graft.ext.Dedup.incrementalNearDupsWithSigs(batch, corpusSigs, corpus,
-      idCol, textCol, threshold, k, bands, shingleN, portable)
-
   /** Streaming SKETCH ingest — the mergeable-summary loop in
     * production: each micro-batch is sketched ALONE
     * ([[graft.ext.Sketches.hllRegisters]] — work ∝ batch size), then

@@ -76,8 +76,8 @@ object DatasetCard {
     // own exchange; the per-doc frame is exactly q97's)
     val dupWord = TextOps.repetitionStats(docs, idCol, textCol)
       .agg(avg(col("dup_word_frac"))).head().getDouble(0)
-    // releasable form: the card is the repeated-monitoring use case,
-    // and the plain form would pin the shingle+signature caches per call
+    // release once counted: the card is the repeated-monitoring use
+    // case, and each call would otherwise pin its shingle+signature caches
     val nd = Dedup.minhashNearDupsReleasable(docs, idCol, textCol,
       threshold = nearDupThreshold, k = 32, bands = 8)
     val nearDups = try nd.result.count() finally nd.release()
@@ -134,14 +134,8 @@ object DatasetCard {
 
   def toJson(c: Card): String = {
     // lang values are data — escape them before they become JSON keys
-    def esc(s: String): String = s.flatMap {
-      case '"'           => "\\\""
-      case '\\'          => "\\\\"
-      case c if c < ' '  => f"\\u${c.toInt}%04x"
-      case c             => c.toString
-    }
     val langs = c.langs.toSeq.sortBy(_._1)
-      .map { case (l, n) => s""""${esc(l)}":$n""" }.mkString("{", ",", "}")
+      .map { case (l, n) => s"${graft.util.Json.str(l)}:$n" }.mkString("{", ",", "}")
     f"""{"metric":"dataset_card","n_docs":${c.nDocs},"total_tokens":${c.totalTokens},""" +
       f""""tokens_p50":${c.tokensP50}%.1f,"tokens_p90":${c.tokensP90}%.1f,""" +
       f""""langs":$langs,"exact_dup_rate":${c.exactDupRate}%.4f,""" +

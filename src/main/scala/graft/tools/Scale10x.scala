@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Empirical 10× scale check for the headline extension family
@@ -255,26 +255,25 @@ object Scale10x {
       generate(spark, src, out, reps)
 
     // --only=q49,q50 restricts the measured set (fixture unaffected).
-    // Patterns match against the FULL gate registry, not just the
-    // curated default list — a newly added query is measurable without
-    // editing this file (unmatched patterns are reported, not ignored).
+    // Patterns are Verify's name filter over the FULL gate registry,
+    // not just the curated default list — a newly added query is
+    // measurable without editing this file.
     val selected = args.find(_.startsWith("--only="))
-      .map(_.stripPrefix("--only=").split(','))
-      .map { pats =>
-        val all = graft.SparkEntry.queries.keys.toSeq.sorted
-        val hit = all.filter(q => pats.exists(q.contains))
-        val missed = pats.filterNot(p => all.exists(_.contains(p)))
-        if (missed.nonEmpty)
-          println(s"[scale10x] WARNING: no gate query matches: ${missed.mkString(",")}")
-        hit
-      }
-      .getOrElse(Queries)
-    val results = selected.map { name =>
-      val base = timeQuery(spark, name, src)
-      val x10 = timeQuery(spark, name, out)
-      val ratio = x10 / base
-      println(f"[scale10x] $name base=$base%.2fs x10=$x10%.2fs ratio=$ratio%.1fx")
-      name -> (base, x10, ratio)
+      .map(o => graft.SparkEntry.select(Some(o.stripPrefix("--only="))))
+      .getOrElse(Queries.map(n => n -> graft.SparkEntry.queries(n)))
+    // Bench's protocol on each fixture; a query that failed on either
+    // is reported by name and left out of the ratios
+    val base = graft.Bench.time(spark, src, selected)
+    val x10 = graft.Bench.time(spark, out, selected)
+    val (timed, failed) = selected.map(_._1)
+      .partition(n => base.contains(n) && x10.contains(n))
+    if (failed.nonEmpty)
+      println(s"[scale10x] failed: ${failed.mkString(",")}")
+    val results = timed.map { name =>
+      val (b, x) = (base(name), x10(name))
+      val ratio = x / b
+      println(f"[scale10x] $name base=$b%.2fs x10=$x%.2fs ratio=$ratio%.1fx")
+      name -> (b, x, ratio)
     }
     val skew = skewSplitEngages(spark)
     val qjson = results.map { case (n, (b, x, r)) =>
@@ -364,17 +363,6 @@ object Scale10x {
       Fx.t(spark, src, t)
         .repartition(1).write.mode("overwrite").parquet(s"$out/$t.parquet"))
   }
-
-  /** min-of-2 wall clock through the noop sink (full materialization,
-    * no write amplification), caches cleared between runs. */
-  private def timeQuery(spark: SparkSession, name: String, dir: String): Double =
-    (1 to 2).map { _ =>
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }.min
 
   /** DedupSpec's AQE skew-split law at 10× corpus size: 800 copies of
     * one boilerplate page in 8 000 unique docs — every copy's band rows

@@ -80,10 +80,16 @@ class DdlAndStoreSpec extends SparkSpec {
   test("forgetWhere: erasure reaches EVERY committed version; history shape and pointer survive") {
     val store = newStore()
     val df = (1L to 40L).map(i => (i, s"u$i")).toDF("id", "v")
-    store.write("gdpr", df)                      // v0
-    store.write("gdpr", df.filter($"id" <= 30L)) // v1 (current)
+    assert(store.write("gdpr", df) == 0)
+    assert(store.write("gdpr", df.filter($"id" <= 30L)) == 1) // current
+    // id sets, not counts: the shared session's ContextCleaner may drop
+    // other suites' dying caches concurrently
+    def ids() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = ids()
     val removed = store.forgetWhere("gdpr", $"id" % 10L === 0L)
     assert(removed == 4L + 3L, s"removed $removed") // v0: 10,20,30,40; v1: 10,20,30
+    assert((ids() -- before).isEmpty,
+      "each rewritten version's checkpoint must be freed, not left persistent")
     assert(store.versions("gdpr") == Seq(0, 1), "history shape preserved")
     assert(store.readVersion("gdpr", 0).filter($"id" % 10L === 0L).count() == 0,
       "erasure must reach historical versions, not just the current one")

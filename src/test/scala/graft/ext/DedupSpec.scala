@@ -31,8 +31,9 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash+LSH finds exact and near duplicates, not unrelated docs") {
-    val pairs = Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.5)
-      .select("a", "b").as[(Long, Long)].collect().toSet
+    val nd = Dedup.minhashNearDupsReleasable(docs, "doc_id", "text", threshold = 0.5)
+    val pairs = nd.result.select("a", "b").as[(Long, Long)].collect().toSet
+    nd.release()
     assert(pairs.contains((1L, 2L)))
     assert(pairs.contains((1L, 3L)) || pairs.contains((2L, 3L)))
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L))
@@ -49,9 +50,9 @@ class DedupSpec extends SparkSpec {
     val docs = Seq((1L, a), (2L, b), (3L, a)).toDF("doc_id", "text")
     // shingleN = 1 pins the textbook word-tf basis the hand math
     // below assumes (the DEFAULT is the non-degenerate 3-gram basis)
-    val out = Dedup.weightedMinhashNearDups(docs, "doc_id", "text",
+    val out = Dedup.weightedMinhashNearDupsReleasable(docs, "doc_id", "text",
         thresholdPpm = 0L, k = 16, bands = 4, weightCap = 8, shingleN = 1)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      .result.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     // verbatim pair: full weighted mass shared
     assert(out((1L, 3L)) == 1000000L, out.toString)
     // hand check (1,2): tf_A = {spark:1, filler*:1 ×10} Σ=11;
@@ -77,9 +78,9 @@ class DedupSpec extends SparkSpec {
     val deg = (1 to 12).map(i =>
       (i.toLong, ("the " * 20).trim + s" unique$i")).toDF("doc_id", "text")
     val ex = intercept[Exception] {
-      Dedup.weightedMinhashNearDups(deg, "doc_id", "text",
+      Dedup.weightedMinhashNearDupsReleasable(deg, "doc_id", "text",
         thresholdPpm = 0L, k = 16, bands = 4, weightCap = 8,
-        shingleN = 1, maxBucketSize = 4).collect()
+        shingleN = 1, maxBucketSize = 4).result.collect()
     }
     val msg = Option(ex.getMessage).getOrElse("") +
       Option(ex.getCause).flatMap(c => Option(c.getMessage)).getOrElse("")
@@ -338,9 +339,10 @@ class DedupSpec extends SparkSpec {
       (12L, base),                                // verbatim resubmission
       (13L, base.replace("green", "teal"))        // near-dup of 10 — batch-INTERNAL, must not appear
     ).toDF("doc_id", "text")
-    val pairs = Dedup.incrementalNearDups(batch, corpus, "doc_id", "text",
+    val nd = Dedup.incrementalNearDups(batch, corpus, "doc_id", "text",
       threshold = 0.5, k = 16, bands = 4)
-      .select("a", "b").as[(Long, Long)].collect().toSet
+    val pairs = nd.result.select("a", "b").as[(Long, Long)].collect().toSet
+    nd.release()
     assert(pairs.contains((10L, 1L)), s"rewrite must match its source: $pairs")
     assert(pairs.contains((12L, 1L)), s"verbatim resubmission must match: $pairs")
     assert(!pairs.exists(_._1 == 11L), s"novel doc must not match: $pairs")
@@ -363,9 +365,10 @@ class DedupSpec extends SparkSpec {
         b, corpus, "doc_id", "text")
         .filter($"jaccard" >= 0.5)
         .select("a", "b").as[(Long, Long)].collect().toSet
-      val oneShot = Dedup.incrementalNearDups(b, corpus, "doc_id", "text",
+      val nd = Dedup.incrementalNearDups(b, corpus, "doc_id", "text",
         threshold = 0.5, k = 16, bands = 4)
-        .select("a", "b").as[(Long, Long)].collect().toSet
+      val oneShot = nd.result.select("a", "b").as[(Long, Long)].collect().toSet
+      nd.release()
       assert(composed == oneShot, s"composition diverged: $composed vs $oneShot")
     } finally cs.unpersist()
   }
@@ -382,13 +385,14 @@ class DedupSpec extends SparkSpec {
     // minimal bitmap (64 bits, 3 keys × 5 probes): high FP probability
     // by construction — novel docs must STILL survive via the verifying
     // anti-join, resubmissions must still drop
-    val kept = Dedup.incrementalExact(batch, corpus, "text", bloomBits = 64)
-      .select($"doc_id").as[Long].collect().toSet
-    assert(kept == Set(10L, 12L))
+    def kept(bloomBits: Int): Set[Long] = {
+      val inc = Dedup.incrementalExactReleasable(batch, corpus, "text", bloomBits)
+      try inc.result.select($"doc_id").as[Long].collect().toSet
+      finally inc.release()
+    }
+    assert(kept(64) == Set(10L, 12L))
     // and with a roomy bitmap the same answer
-    val kept2 = Dedup.incrementalExact(batch, corpus, "text", bloomBits = 1 << 12)
-      .select($"doc_id").as[Long].collect().toSet
-    assert(kept2 == Set(10L, 12L))
+    assert(kept(1 << 12) == Set(10L, 12L))
   }
 
   test("releasable near-dup forms drop exactly their own caches (ingest loops stay flat)") {

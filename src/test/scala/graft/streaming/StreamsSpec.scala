@@ -229,7 +229,7 @@ class StreamsSpec extends SparkSpec {
       // side contributes the only one; the corpus branch is an
       // InMemoryTableScan (plus candidate-id-restricted text reads in
       // the verify stage, which shingle only docs a candidate names)
-      val epoch = Streams.nearDupIngestBatch(
+      val epoch = Dedup.incrementalNearDupsWithSigsReleasable(
         Seq((9L, "probe text")).toDF("doc_id", "text"), corpusSigs, corpus,
         "doc_id", "text", 0.5, 16, 4, 3, portable = false)
       val cand = Dedup.lshCandidatesAcross(
@@ -238,7 +238,8 @@ class StreamsSpec extends SparkSpec {
       val candPlan = cand.queryExecution.executedPlan.toString
       assert(candPlan.contains("InMemoryTableScan"),
         "corpus signatures must come from the persisted frame:\n" + candPlan)
-      assert(epoch.columns.toSet == Set("a", "b", "jaccard"))
+      assert(epoch.result.columns.toSet == Set("a", "b", "jaccard"))
+      epoch.release()
     } finally corpusSigs.unpersist()
   }
 

@@ -47,7 +47,11 @@ class DatasetCardSpec extends SparkSpec {
     // malformed JSON keys
     val weird = card.copy(langs = Map("e\"n\\x\n" -> 3L))
     val json = DatasetCard.toJson(weird)
-    assert(json.contains("\"e\\\"n\\\\x\\u000a\":3"), json)
+    // parse, not byte-match: the quote, the backslash and the control
+    // char must each decode back to the original key
+    val langs = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(json).get("langs")
+    assert(langs.size == 1 && langs.path("e\"n\\x\n").asLong(-1L) == 3L, json)
   }
 
   test("dataset card surfaces planted duplication and PII") {
