@@ -78,9 +78,13 @@ object Fx {
   * supply one instead of silently losing the fence:
   *
   *  - '''HDFS / local file system''' (the default implementation):
-  *    `createNewFile` is an atomic exclusive create and
-  *    `FileContext.rename(OVERWRITE)` is an atomic overwrite-rename —
-  *    both guarantees hold natively. Nothing to configure.
+  *    `createNewFile` is an atomic exclusive create; the overwrite-
+  *    rename is `FileContext.rename(OVERWRITE)` on HDFS and, on the
+  *    local file system, `java.nio.file.Files.move(ATOMIC_MOVE)` — one
+  *    POSIX `rename(2)` that throws rather than fall back to a
+  *    non-atomic copy (FileContext's local rename forks a `readlink`
+  *    process per call) — both guarantees hold natively. Nothing to
+  *    configure.
   *  - '''S3-class object stores''': NEITHER primitive is atomic
   *    through the vanilla Hadoop connector (`createNewFile` is a
   *    HEAD-then-PUT race; rename is copy+delete). Deployments there
@@ -195,10 +199,25 @@ final class TableStore(spark: SparkSession, root: String,
     * trait's per-store-class matrix for where this is NOT enough). */
   private lazy val atomic: AtomicOps = atomicOps.getOrElse(new AtomicOps {
     override def createExclusive(path: Path): Boolean = fs.createNewFile(path)
-    override def renameOverwrite(src: Path, dst: Path): Unit = {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        new Path(root).toUri, spark.sparkContext.hadoopConfiguration)
-      fc.rename(src, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    override def renameOverwrite(src: Path, dst: Path): Unit = fs match {
+      case local if local.getUri.getScheme == "file" =>
+        import java.nio.file.{Files, Paths, StandardCopyOption}
+        def nio(p: Path) = Paths.get(local.makeQualified(p).toUri)
+        // the checksum side files (`.<name>.crc`) cannot move in the
+        // same rename: drop dst's first (a pointer without one reads
+        // unverified; a stale one would fail the read), src's after
+        def crc(p: Path): Option[java.nio.file.Path] = local match {
+          case c: org.apache.hadoop.fs.ChecksumFileSystem => Some(nio(c.getChecksumFile(p)))
+          case _ => None
+        }
+        crc(dst).foreach(Files.deleteIfExists)
+        Files.move(nio(src), nio(dst),
+          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+        crc(src).foreach(Files.deleteIfExists)
+      case _ =>
+        val fc = org.apache.hadoop.fs.FileContext.getFileContext(
+          new Path(root).toUri, spark.sparkContext.hadoopConfiguration)
+        fc.rename(src, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     }
   })
   private def tableDir(name: String) = new Path(root, name)
@@ -561,18 +580,21 @@ final class TableStore(spark: SparkSession, root: String,
     *
     * Each version is one filter scan materialized BEFORE its directory
     * is overwritten (read-then-overwrite on the same path needs the
-    * barrier), so cost is one pass over history — the expected shape
-    * for an erasure batch job. */
+    * barrier), then one write, so cost is one pass over history — the
+    * expected shape for an erasure batch job. The removed-row count
+    * rides that scan as an [[org.apache.spark.sql.Observation]]
+    * (`count_if` of the definite matches), not as extra count jobs. */
   def forgetWhere(name: String, condition: org.apache.spark.sql.Column): Long = {
+    import org.apache.spark.sql.functions.{coalesce, count_if, lit}
+    val matched = coalesce(condition, lit(false))
     var removed = 0L
     versions(name).foreach { v =>
       val cur = readVersion(name, v)
-      val before = cur.count()
-      val keep = cur
-        .filter(!org.apache.spark.sql.functions.coalesce(
-          condition, org.apache.spark.sql.functions.lit(false)))
+      val obs = org.apache.spark.sql.Observation()
+      val keep = cur.observe(obs, count_if(matched).as("removed"))
+        .filter(!matched)
         .localCheckpoint(true)
-      removed += before - keep.count()
+      removed += obs.get("removed").asInstanceOf[Long]
       keep.write.mode("overwrite").parquet(snapshotDir(name, v).toString)
       graft.util.Caches.release(keep)
       // erasure is the ONE in-place rewrite of committed history: every

@@ -1,7 +1,10 @@
 package graft.ext
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.functions.{AdcTable, EncodeAssign, IvfPqConsts}
 
 /** Approximate-nearest-neighbor / similarity search over an embedding
   * column (north-star extension; SURVEY §2.4 — no counterpart in the
@@ -14,7 +17,7 @@ import org.apache.spark.sql.functions._
   *    combine — one query's candidates never sort in a single task).
   *    Never use when both sides are large.
   *  - [[IvfIndex]]: inverted-file ANN — corpus bucketed by nearest of C
-  *    deterministic centroids (one broadcast join at build), queries
+  *    deterministic centroids (one per-row argmax at build), queries
   *    probe only `nprobe` buckets ⇒ the scan shrinks by ~C/nprobe.
   *
   * All vector math is `zip_with`/`aggregate` higher-order expressions —
@@ -340,10 +343,9 @@ object Similarity {
     *  - assignment has TWO bit-identical modes (same dot order, same
     *    lowest-id tie-break). `broadcastCentroids = true` (the
     *    production default) ships the centroid matrix ONCE per executor
-    *    as a broadcast relation: a BroadcastNestedLoopJoin fan-out,
-    *    per-(row, centroid) dot, then `max_by` per row — the id
-    *    partitioning from the build survives the broadcast join, so
-    *    the argmax aggregate and the vector re-join add NO exchange.
+    *    as a Spark broadcast read by the native
+    *    [[graft.functions.EncodeAssign]] kernel: one narrow projection
+    *    over the cached corpus, no join, no aggregate, no exchange.
     *    `false` embeds the C centroids as LITERALS in a narrow argmax
     *    projection — zero joins, fully codegen'd, but the literals ride
     *    inside EVERY task binary (fine at contract C, tens of MB of
@@ -358,22 +360,14 @@ object Similarity {
     val c = normalizedById(corpus, idCol, vecCol)
     val n = c.count() // also materializes the persist for the passes below
     val cents = trainCentroids(c, n, nCentroids, kmeansIters, sampleFactor)
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val centroids = cents.zipWithIndex.toSeq
-      .map { case (v, i) => (i, v) }.toDF("centroid_id", "__cv")
+    val centroids = centroidFrame(corpus.sparkSession, cents)
     val assigned =
       if (broadcastCentroids) {
-        // ties break to the LOWEST centroid_id on equal score — the
-        // struct ordering (score asc, -id asc) makes max_by pick it,
-        // matching the literal mode's first-max array_position
-        val best = c.crossJoin(broadcast(centroids))
-          .select(col("__id"), col("centroid_id"),
-            dot(col("__v"), col("__cv")).as("__s"))
-          .groupBy(col("__id"))
-          .agg(max_by(col("centroid_id"),
-            struct(col("__s"), -col("centroid_id"))).as("centroid_id"))
-        c.join(best, Seq("__id")).select(col("__id"), col("__v"), col("centroid_id"))
+        // ties break to the LOWEST centroid_id on equal score, matching
+        // the literal mode's first-max array_position
+        val k = ivfPqKernel(corpus.sparkSession, centroidPairs(cents), None)
+        c.select(col("__id"), col("__v"),
+          EncodeAssign.column(col("__v"), k).getField("centroid_id").as("centroid_id"))
       } else {
         // argmax over C literal-centroid dot products — narrow,
         // codegen'd, zero-shuffle; array_position returns the FIRST
@@ -550,35 +544,21 @@ object Similarity {
   /** PQ-encode the corpus: per subspace, the nearest codeword's index
     * (argmin ‖v_j − c‖² as argmax of dot − 0.5‖c‖²; LOWEST code wins
     * ties). Two bit-identical modes, like [[ivfBuild]]:
-    * `broadcastBooks = true` (production default) joins a broadcast
-    * (subspace, code, codeword, ½‖c‖²) frame — m·ksub rows — scores
-    * per (row, subspace, code), and folds back to one codes array per
-    * row via two partial aggregates that exchange only (id, j, code)
-    * triples, never the vectors; the unrolled m·ksub literal expression
-    * tree otherwise rides in every task binary of every query that
-    * touches the encoded corpus. `false` is that narrow literal
-    * projection — no join, no shuffle, oracle-replayable.
-    * Returns (idCol, codes array<int>, one 0-based code per subspace). */
+    * `broadcastBooks = true` (production default) ships the m·ksub
+    * codewords and their ½‖c‖² ONCE per executor as a Spark broadcast
+    * read by the native [[graft.functions.EncodeAssign]] kernel — one
+    * narrow projection, no join, no aggregate, no exchange; the
+    * unrolled m·ksub literal expression tree otherwise rides in every
+    * task binary of every query that touches the encoded corpus.
+    * `false` is that narrow literal projection — oracle-replayable.
+    * Returns (idCol, codes array<int>, one 0-based code per subspace),
+    * one row per input row. */
   def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
       books: PqBooks, broadcastBooks: Boolean = true): DataFrame = {
     val v = l2Normalize(col(vecCol).cast("array<double>"))
     if (broadcastBooks) {
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      val bookRows = for { j <- 0 until books.m; cI <- 0 until books.ksub }
-        yield (j, cI, books.books(j)(cI).toSeq, books.halfNormSq(j)(cI))
-      val bf = bookRows.toDF("__j", "__c", "__bv", "__h")
-      val bestPerSub = corpus.select(col(idCol), v.as("__nv"))
-        .crossJoin(broadcast(bf))
-        .select(col(idCol), col("__j"), col("__c"),
-          (dot(slice(col("__nv"), col("__j") * books.ds + 1, lit(books.ds)),
-            col("__bv")) - col("__h")).as("__s"))
-        .groupBy(col(idCol), col("__j"))
-        .agg(max_by(col("__c"), struct(col("__s"), -col("__c"))).as("__code"))
-      bestPerSub.groupBy(col(idCol))
-        .agg(transform(
-          array_sort(collect_list(struct(col("__j"), col("__code")))),
-          e => e.getField("__code")).as("codes"))
+      val k = ivfPqKernel(corpus.sparkSession, Nil, Some(books))
+      corpus.select(col(idCol), EncodeAssign.column(v, k).getField("codes").as("codes"))
     } else {
       val codes = (0 until books.m).map { j =>
         val sub = slice(v, j * books.ds + 1, books.ds)
@@ -593,19 +573,16 @@ object Similarity {
   }
 
   /** PQ ADC search: each query precomputes its m×ksub dot-product
-    * table ONCE (a narrow query-side column), broadcasts, and every
-    * candidate scores with m table LOOKUPS + adds — no per-pair dot
-    * products, the corpus never shuffles. Approximate inner product on
-    * the normalized vectors; rank ties break by nn_id. */
+    * table ONCE (a narrow query-side column — the native
+    * [[graft.functions.AdcTable]] kernel over the broadcast codebooks),
+    * broadcasts, and every candidate scores with m table LOOKUPS + adds
+    * — no per-pair dot products, the corpus never shuffles. Approximate
+    * inner product on the normalized vectors; rank ties break by nn_id. */
   def pqSearch(encoded: DataFrame, idCol: String, books: PqBooks,
       queries: DataFrame, qIdCol: String, qVecCol: String, k: Int): DataFrame = {
     requireIntegralId(encoded, idCol, "pqSearch")
     val qv = l2Normalize(col(qVecCol).cast("array<double>"))
-    val table = array((0 until books.m).map { j =>
-      val sub = slice(qv, j * books.ds + 1, books.ds)
-      array((0 until books.ksub).map(cI =>
-        dot(sub, array(books.books(j)(cI).map(lit).toSeq: _*))): _*)
-    }: _*)
+    val table = AdcTable.column(qv, ivfPqKernel(queries.sparkSession, Nil, Some(books)))
     val q = queries.select(col(qIdCol).as("query_id"), table.as("__T"))
     val adc = (0 until books.m)
       .map(j => element_at(element_at(col("__T"), j + 1),
@@ -649,45 +626,58 @@ object Similarity {
   }
 
   /** FUSED centroid assignment + PQ encode over an id-keyed,
-    * L2-NORMALIZED frame (`__id`, `__v`) — one broadcast of the
-    * C + m·ksub constant rows (centroids tagged kind 0, codewords
-    * kind 1) fanned out per row, then ONE aggregate keyed on `__id`
-    * whose per-kind `max_by` picks reproduce [[ivfBuild]]'s broadcast
-    * assignment and [[pqEncode]]'s broadcast encode bit for bit (same
-    * dot/score expressions, same lowest-id/lowest-code tie-break via
-    * the (score, −id) struct; `max_by` ignores the null ordering
-    * values the kind/subspace guards leave on foreign rows). This is
-    * r17 guide-§2.4 shuffle removal: the previous composition ran the
-    * assignment aggregate, the encode's two aggregates, AND an id
-    * join to stitch them — three exchanges plus a join where one
-    * id-partitioned aggregate suffices. On an id-partitioned input
-    * the whole fused pass plans with NO additional exchange
-    * (pinned in PlanShapeSpec). */
-  private def fusedEncodeAssign(rows: DataFrame, centroids: DataFrame,
-      books: PqBooks): DataFrame = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val bookRows = for { j <- 0 until books.m; cI <- 0 until books.ksub }
-      yield (1, j, cI, books.books(j)(cI).toSeq, books.halfNormSq(j)(cI))
-    val bf = bookRows.toDF("__kind", "__i1", "__i2", "__vec", "__h")
-    val cf = centroids.select(lit(0).as("__kind"),
-      col("centroid_id").cast("int").as("__i1"), lit(0).as("__i2"),
-      col("__cv").as("__vec"), lit(0.0).as("__h"))
-    val s = when(col("__kind") === 0, dot(col("__v"), col("__vec")))
-      .otherwise(dot(slice(col("__v"), col("__i1") * books.ds + 1,
-        lit(books.ds)), col("__vec")) - col("__h"))
-    val scored = rows.crossJoin(broadcast(cf.unionByName(bf)))
-      .select(col("__id"), col("__kind"), col("__i1"), col("__i2"),
-        s.as("__s"))
-    def pick(cond: Column, idc: Column): Column =
-      max_by(when(cond, idc), when(cond, struct(col("__s"), -idc)))
-    scored.groupBy(col("__id")).agg(
-        pick(col("__kind") === 0, col("__i1")).as("centroid_id"),
-        array((0 until books.m).map(j =>
-          pick(col("__kind") === 1 && col("__i1") === j,
-            col("__i2"))): _*).as("codes"))
-      .select(col("__id"), col("centroid_id"), col("codes"))
+    * L2-NORMALIZED frame (`__id`, `__v`) in ONE narrow projection: the
+    * native [[graft.functions.EncodeAssign]] kernel scores each row
+    * against the C centroids and the m·ksub codewords, which ride in
+    * one Spark broadcast (the task binary carries only its handle).
+    * Outputs are bit identical to [[ivfBuild]]'s assignment and
+    * [[pqEncode]]'s encode — same dot order, same `− ½‖c‖²`, same
+    * lowest-id/lowest-code tie-break; SimilaritySpec pins the kernel
+    * row for row against the composition it replaced, which fanned
+    * every row out to the C + m·ksub constant rows and folded them
+    * back with per-kind `max_by` picks in a sort-based aggregate. The
+    * projection keeps its input's partitioning, so over the build's
+    * cached corpus it plans no join, aggregate or exchange (pinned in
+    * PlanShapeSpec). */
+  private def fusedEncodeAssign(rows: DataFrame,
+      centroids: Seq[(Int, Array[java.lang.Double])], books: PqBooks): DataFrame = {
+    val k = ivfPqKernel(rows.sparkSession, centroids, Some(books))
+    // two projections: the kernel runs once per row, not once per field
+    rows.select(col("__id"), EncodeAssign.column(col("__v"), k).as("__ea"))
+      .select(col("__id"), col("__ea.centroid_id").as("centroid_id"),
+        col("__ea.codes").as("codes"))
   }
+
+  /** The broadcast constants of the [[graft.functions.EncodeAssign]]
+    * and [[graft.functions.AdcTable]] kernels: `centroids` as (id,
+    * vector) pairs (empty for a PQ-only encode or search), `books` None
+    * for an IVF-only assignment. */
+  private def ivfPqKernel(spark: SparkSession,
+      centroids: Seq[(Int, Array[java.lang.Double])],
+      books: Option[PqBooks]): Broadcast[IvfPqConsts] =
+    spark.sparkContext.broadcast(IvfPqConsts(centroids,
+      books.fold(Array.empty[Array[Array[Double]]])(_.books),
+      books.fold(Array.empty[Array[Double]])(_.halfNormSq),
+      books.fold(0)(_.ds)))
+
+  /** Trained centroids as the index's (centroid_id, __cv) table, ids
+    * 0..C−1. */
+  private def centroidFrame(spark: SparkSession,
+      cents: Array[Array[Double]]): DataFrame = {
+    import spark.implicits._
+    cents.zipWithIndex.toSeq.map { case (v, i) => (i, v) }.toDF("centroid_id", "__cv")
+  }
+
+  private def centroidPairs(cents: Array[Array[Double]]): Seq[(Int, Array[java.lang.Double])] =
+    cents.toSeq.zipWithIndex.map { case (v, i) => (i, v.map(Double.box)) }
+
+  /** A stored (centroid_id, __cv) table as kernel centroids — one
+    * C-row collect. */
+  private def centroidPairs(centroids: DataFrame): Seq[(Int, Array[java.lang.Double])] =
+    centroids.select(col("centroid_id").cast("int"), col("__cv")).collect().toSeq.map { r =>
+      require(!r.isNullAt(0), "IVF centroids table holds a null centroid_id")
+      (r.getInt(0), if (r.isNullAt(1)) null else r.getSeq[java.lang.Double](1).toArray)
+    }
 
   /** Build the IVF-PQ composition. Codes encode the NORMALIZED
     * VECTOR directly (the IVFFlat-PQ hybrid), not the centroid
@@ -697,15 +687,13 @@ object Similarity {
     * anyway.
     *
     * The default (broadcast-constants) arm runs the
-    * [[fusedEncodeAssign]] single-pass: one bounded k-means train,
-    * then ONE id-keyed aggregate producing (id, centroid_id, codes) —
-    * the r16 shape (assignment aggregate + two encode aggregates + an
-    * id join) spent three exchanges and a join on what one aggregate
-    * over the already-id-partitioned corpus computes; outputs are bit
-    * identical (same scores, same tie-breaks — spec-pinned against
-    * the composed form). The literal arm (`broadcastConstants =
-    * false`) keeps the oracle-replayable composition: narrow literal
-    * projections joined on id. */
+    * [[fusedEncodeAssign]] single pass: one bounded k-means train,
+    * then ONE narrow kernel projection over the cached, id-partitioned
+    * corpus producing (id, centroid_id, codes) — no join, aggregate
+    * or exchange; outputs are bit identical to the composed form (same
+    * scores, same tie-breaks — spec-pinned). The literal arm
+    * (`broadcastConstants = false`) keeps the oracle-replayable
+    * composition: narrow literal projections joined on id. */
   def ivfPqBuild(corpus: DataFrame, idCol: String, vecCol: String,
       nCentroids: Int, books: PqBooks, kmeansIters: Int = 5,
       sampleFactor: Int = 40, broadcastConstants: Boolean = true): IvfPqIndex = {
@@ -714,12 +702,8 @@ object Similarity {
       val c = normalizedById(corpus, idCol, vecCol)
       val n = c.count() // materializes the persist for the passes below
       val cents = trainCentroids(c, n, nCentroids, kmeansIters, sampleFactor)
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      val centroids = cents.zipWithIndex.toSeq
-        .map { case (v, i) => (i, v) }.toDF("centroid_id", "__cv")
-      IvfPqIndex(fusedEncodeAssign(c, centroids, books), centroids, books,
-        Some(c))
+      IvfPqIndex(fusedEncodeAssign(c, centroidPairs(cents), books),
+        centroidFrame(corpus.sparkSession, cents), books, Some(c))
     } else {
       val idx = ivfBuild(corpus, idCol, vecCol, nCentroids, kmeansIters,
         sampleFactor, broadcastCentroids = false)
@@ -753,11 +737,8 @@ object Similarity {
     // (query, probe) row, never per candidate
     val qc = q.crossJoin(broadcast(index.centroids))
       .withColumn("__csim", dot(col("__qv"), col("__cv")))
-    val table = array((0 until books.m).map { j =>
-      val sub = slice(col("__qv"), j * books.ds + 1, books.ds)
-      array((0 until books.ksub).map(cI =>
-        dot(sub, array(books.books(j)(cI).map(lit).toSeq: _*))): _*)
-    }: _*)
+    val table = AdcTable.column(col("__qv"),
+      ivfPqKernel(queries.sparkSession, Nil, Some(books)))
     val probes = topKPerQuery(qc, col("centroid_id"), col("__csim"), "__csim", nprobe)
       .select(col("query_id"), col("nn_id").cast("int").as("centroid_id"))
       .join(q, Seq("query_id"))
@@ -843,6 +824,16 @@ object Similarity {
     (m.getInt(0), m.getInt(1), m.getInt(2))
   }
 
+  /** The triples of several manifest versions in ONE scan (a union of
+    * the 1-row version snapshots), not one job per version. */
+  private def manifestTriples(store: graft.core.TableStore, name: String,
+      mvs: Seq[Int]): Map[Int, (Int, Int, Int)] =
+    if (mvs.isEmpty) Map.empty
+    else mvs.map(mv => store.readVersion(s"${name}_manifest", mv)
+        .select(lit(mv), col("encoded_v"), col("centroids_v"), col("books_v")))
+      .reduce(_ union _).collect()
+      .map(r => r.getInt(0) -> ((r.getInt(1), r.getInt(2), r.getInt(3)))).toMap
+
   /** Load a persisted IVF-PQ index (see [[saveIvfPq]]). The returned
     * index has no backing cache (`unpersist()` is a no-op) — the
     * encoded/centroid frames read straight from the store snapshots.
@@ -882,14 +873,17 @@ object Similarity {
     * operator with itself on different inputs, not of two lookalike
     * code paths). Assignment is ivfBuild's broadcast argmax with the
     * bit-identical tie-break (max score, lowest centroid_id on ties);
-    * returns (__id, centroid_id, codes). Batch-sized: broadcast
-    * centroids/books, no corpus participation. */
+    * returns (__id, centroid_id, codes), one row per batch row.
+    * Batch-sized: the stored centroids are collected once (C rows)
+    * into the kernel's broadcast, and the encode is one narrow
+    * projection over the batch — no join, aggregate or exchange, no
+    * corpus participation. */
   private[graft] def encodeAssign(batch: DataFrame, idCol: String,
       vecCol: String, centroids: DataFrame, books: PqBooks): DataFrame =
-    fusedEncodeAssign( // one aggregate, not [agg + 2-agg encode + join]
+    fusedEncodeAssign(
       batch.select(col(idCol).as("__id"),
         l2Normalize(col(vecCol).cast("array<double>")).as("__v")),
-      centroids, books)
+      centroidPairs(centroids), books)
 
   /** Incremental index MAINTENANCE (r15 verdict next-round item 6) —
     * UPSERT semantics (r16 verdict item 1): encode a document batch
@@ -902,10 +896,11 @@ object Similarity {
     * re-sends a changed document gets the fresh encoding, never a
     * double entry — without the anti-join a re-sent id would encode
     * twice and a top-k could return the same nn_id twice (shrinking
-    * effective k). Intra-batch duplicate ids are REJECTED loudly (one
-    * batch-sized aggregate): two vectors claiming one id in a single
-    * batch has no well-defined winner, and the per-subspace encode
-    * argmax would silently mix codes across the two vectors.
+    * effective k). Intra-batch duplicate (or null) ids are REJECTED
+    * loudly: two vectors claiming one id in a single batch have no
+    * well-defined winner. The batch ids are collected ONCE (batch-sized,
+    * the same bound as the id set the anti-join broadcasts): that one
+    * array is both the uniqueness check and the replace-by-id set.
     *
     * The new union writes as a new `<name>_encoded` version and the
     * manifest commits LAST pinning (new encoded_v, SAME centroids_v,
@@ -915,10 +910,10 @@ object Similarity {
     * full re-encode of the upserted corpus under the same codebook).
     *
     * Scale shape: the only corpus-sized work is one scan of the OLD
-    * encoded table (~64×-compressed codes, no vectors) — now through
-    * one batch-side-broadcast anti-join — unioned into the new
-    * snapshot; the batch side is batch-sized (broadcast
-    * centroids/books, no shuffle beyond the id repartition). At a
+    * encoded table (~64×-compressed codes, no vectors) — through one
+    * anti-join against the broadcast batch ids — unioned into the new
+    * snapshot; the batch side is batch-sized (one id collect, then the
+    * encode kernel as a narrow projection in the write itself). At a
     * daily-ingest cadence this is the difference between re-encoding
     * 100 TB and encoding the day's arrivals. */
   def appendIvfPq(store: graft.core.TableStore, name: String,
@@ -928,8 +923,10 @@ object Similarity {
     val triple = ivfPqManifest(store, name)
     val (_, cenV, bkV) = triple
     val cur = loadIvfPqAt(store, name, triple) // one manifest read, not two
-    val dup = batch.agg(count(lit(1)), count_distinct(col(idCol))).head()
-    val (nRows, nIds) = (dup.getLong(0), dup.getLong(1))
+    val idField = batch.select(col(idCol).as("__id")).schema
+    val ids = batch.select(col(idCol)).collect()
+    val (nRows, nIds) =
+      (ids.length, ids.iterator.filterNot(_.isNullAt(0)).map(_.get(0)).toSet.size)
     require(nRows == nIds,
       s"appendIvfPq: batch ids must be unique — got $nRows rows over " +
         s"$nIds distinct '$idCol' values; two vectors under one id in " +
@@ -938,9 +935,9 @@ object Similarity {
         "replace-by-id applies)")
     val appended = encodeAssign(batch, idCol, vecCol, cur.centroids, cur.books)
     // replace-by-id: retained = old rows whose id is NOT re-sent (the
-    // batch id set broadcasts; the codes scan never shuffles)
-    val retained = cur.encoded.join(
-      broadcast(appended.select(col("__id"))), Seq("__id"), "left_anti")
+    // collected batch id set broadcasts; the codes scan never shuffles)
+    val retained = cur.encoded.join(broadcast(spark.createDataFrame(
+      java.util.Arrays.asList(ids: _*), idField)), Seq("__id"), "left_anti")
     val encV = store.write(s"${name}_encoded", retained.union(appended))
     commitIndexManifest(store, name, encV, cenV, bkV)
   }
@@ -995,8 +992,7 @@ object Similarity {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     val mvs = store.versions(s"${name}_manifest")
     require(mvs.nonEmpty, s"index $name has no committed manifest")
-    val kept = mvs.takeRight(keepLast)
-    val triples = kept.map(mv => ivfPqManifest(store, name, Some(mv)))
+    val triples = manifestTriples(store, name, mvs.takeRight(keepLast)).values
     def expireBelow(member: String, minRef: Int): Seq[Int] = {
       val latest = store.versions(s"$name$member").max
       store.expireVersions(s"$name$member", keepLast = latest - minRef + 1)
@@ -1027,12 +1023,16 @@ object Similarity {
     * join). recall_ppm is exact integer arithmetic:
     * ⌊10⁶·Σ overlap/(n_eval·k)⌋.
     *
-    * Scale shape: per version, ONE eval-sized collect (2·nEval id
-    * rows), one brute-force pass of the version-restricted corpus
-    * against nEval broadcast queries (the deliberately-priced exact
-    * audit, eval-budget-bounded like lshRecallAudit's maxDocs), and
-    * one probe-bounded index search. Versions are few (one per
-    * save/append); the loop is driver-side by design. */
+    * Scale shape: per DISTINCT (encoded_v, centroids_v, books_v)
+    * triple, ONE eval-sized collect (2·nEval id rows), one brute-force
+    * pass of the version-restricted corpus against nEval broadcast
+    * queries (the deliberately-priced exact audit, eval-budget-bounded
+    * like lshRecallAudit's maxDocs), and one probe-bounded index
+    * search. Manifest versions naming the same triple (a forget
+    * re-commits the current one) share that evaluation, since member
+    * snapshots are immutable; every version still gets its row.
+    * Versions are few (one per save/append/forget); the loop is
+    * driver-side by design. */
   def ivfPqRecallDrift(store: graft.core.TableStore, name: String,
       corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, nprobe: Int = 1, nEval: Int = 50,
@@ -1043,8 +1043,9 @@ object Similarity {
     requireIntegralId(corpus, idCol, "ivfPqRecallDrift")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val rows = store.versions(s"${name}_manifest").map { mv =>
-      val idx = loadIvfPq(store, name, version = Some(mv))
+    val evaluated = scala.collection.mutable.Map.empty[(Int, Int, Int), (Long, Long)]
+    def evaluate(triple: (Int, Int, Int)): (Long, Long) = {
+      val idx = loadIvfPqAt(store, name, triple)
       val ids = idx.encoded.select(col("__id").cast("long"))
         .orderBy(col("__id").desc).limit(nEval)
         .as[Long].collect().toSeq
@@ -1066,7 +1067,12 @@ object Similarity {
         .agg(sum(col("n_overlap")), count(lit(1))).head()
       val (hits, nq) = (overlap.getLong(0), overlap.getLong(1))
       inIndex.unpersist()
-      val recallPpm = hits * 1000000L / (nq * k)
+      (nq, hits * 1000000L / (nq * k))
+    }
+    val mvs = store.versions(s"${name}_manifest")
+    val triples = manifestTriples(store, name, mvs)
+    val rows = mvs.map { mv =>
+      val (nq, recallPpm) = evaluated.getOrElseUpdate(triples(mv), evaluate(triples(mv)))
       (mv, nq, recallPpm,
         if (recallPpm >= thresholdPpm) "ok" else "retrain")
     }

@@ -96,47 +96,40 @@ class PlanShapeSpec extends SparkSpec {
     } finally idx.unpersist()
   }
 
-  test("IVF broadcast-mode assignment: centroids travel as a broadcast relation, vectors never re-exchange") {
-    // the production default: the argmax aggregate and the vector
-    // re-join both reuse the build's id hash-partitioning, so the only
-    // exchange in the whole assignment is the one id spread inside the
-    // cached corpus — same count as the literal mode, with the centroid
-    // matrix OUT of the task binaries
-    val idx = graft.ext.Similarity.ivfBuild(
-      core.Fx.t(spark, sfDir, "embeddings"), "vec_id", "embedding", nCentroids = 4)
-    try {
-      val p = plan(idx.assigned)
-      assert(p.contains("BroadcastNestedLoopJoin"),
-        "centroids must broadcast-join, not embed as literals: " + p)
-      // no SHUFFLE exchange above the cached corpus — the argmax agg
-      // and the vector re-join ride the build's id partitioning (AQE
-      // may still BroadcastExchange the tiny fixture side; that's fine)
-      val aboveCache = aboveCacheOf(p)
-      assert("[+:]- Exchange ".r.findFirstIn(aboveCache).isEmpty,
-        "assignment must reuse the build's id partitioning (no shuffle): " + p)
-    } finally idx.unpersist()
+  /** The encode-assign kernel's shape over the cached corpus: the
+    * kernel is in the plan, and nothing above the cache joins,
+    * aggregates or exchanges — the fan-out join, the `max_by` fold and
+    * their exchanges must not come back. */
+  private def assertKernelProjection(p: String): Unit = {
+    assert(p.contains("graft_encode_assign"),
+      "constants must reach the rows through the encode-assign kernel: " + p)
+    val aboveCache = aboveCacheOf(p)
+    assert(aboveCache.contains("InMemoryTableScan"), p)
+    Seq("Join", "Aggregate", "Exchange").foreach(op =>
+      assert(!aboveCache.contains(op), s"the kernel projection must not $op: $p"))
   }
 
-  test("fused IVF-PQ build: one id-keyed aggregate, no join, no shuffle above the cached corpus (r17)") {
-    // the r16 composition planned the assignment aggregate, the
-    // encode's two aggregates AND an id join (three exchanges + a
-    // join); the fused pass must plan as ONE broadcast fan-out + ONE
-    // aggregate riding the build's id partitioning
+  test("IVF broadcast-mode assignment: one kernel projection over the cached corpus, no join, aggregate or exchange") {
+    // the production default: the centroid matrix rides in the kernel's
+    // Spark broadcast (out of the task binaries), and the assignment is
+    // as narrow as the literal mode — the only exchange in the whole
+    // plan is the id spread inside the cached corpus
+    val idx = graft.ext.Similarity.ivfBuild(
+      core.Fx.t(spark, sfDir, "embeddings"), "vec_id", "embedding", nCentroids = 4)
+    try assertKernelProjection(plan(idx.assigned))
+    finally idx.unpersist()
+  }
+
+  test("fused IVF-PQ build: one kernel projection, no join, aggregate or exchange above the cached corpus") {
+    // r16 planned the assignment aggregate, the encode's two aggregates
+    // AND an id join; r17 one broadcast fan-out + one sort aggregate;
+    // the kernel computes (centroid_id, codes) per row in a projection
     val books = graft.ext.Similarity.pqSeededBooks(dim = 64, m = 8, ksub = 16)
     val idx = graft.ext.Similarity.ivfPqBuild(
       core.Fx.t(spark, sfDir, "embeddings"), "vec_id", "embedding",
       nCentroids = 4, books)
-    try {
-      val p = plan(idx.encoded)
-      assert(p.contains("BroadcastNestedLoopJoin"),
-        "constants must broadcast-join, not embed as literals: " + p)
-      val aboveCache = aboveCacheOf(p)
-      assert("[+:]- Exchange ".r.findFirstIn(aboveCache).isEmpty,
-        "fused encode must reuse the build's id partitioning (no shuffle): " + p)
-      Seq("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin").foreach(op =>
-        assert(!aboveCache.contains(op),
-          s"fused encode must not stitch with a join ($op): " + p))
-    } finally idx.unpersist()
+    try assertKernelProjection(plan(idx.encoded))
+    finally idx.unpersist()
   }
 
   test("IVF search broadcasts the probe side — the corpus never shuffles for candidates") {

@@ -547,10 +547,11 @@ class DedupSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), p)
     // the corpus-sized pair join keys on centroid_id (hash/sort-merge);
-    // the only nested-loop joins are the C-row centroid fan-outs inside
-    // each side's assignment
+    // each side's centroid assignment is a per-row kernel projection,
+    // so no nested-loop join is left anywhere
     assert("Join \\[centroid_id".r.findFirstIn(p).isDefined ||
       p.contains("Join [centroid_id"), p)
+    assert(!p.contains("NestedLoopJoin"), p)
     spark.catalog.clearCache()
   }
 

@@ -598,6 +598,36 @@ class SimilaritySpec extends SparkSpec {
     } finally base.unpersist()
   }
 
+  test("appendIvfPq runs no aggregate job: the id check and the encode ride one collect and the write") {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val emb = Fx.t(spark, sfDir, "embeddings")
+    val books = Similarity.pqSeededBooks(dim = 64, m = 8, ksub = 16)
+    val store = new graft.core.TableStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-annjobs").toString)
+    val base = Similarity.ivfPqBuild(
+      emb.filter($"vec_id" % 2 === 0), "vec_id", "embedding",
+      nCentroids = 8, books)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.optimizedPlan.exists(_.isInstanceOf[Aggregate]))
+          plans.add(qe.optimizedPlan.treeString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    try {
+      Similarity.saveIvfPq(base, store, "ann")
+      val odd = emb.filter($"vec_id" % 2 === 1)
+      spark.listenerManager.register(listener)
+      val (_, jobs) = graft.tools.Probe.jobsDuring(spark)(
+        Similarity.appendIvfPq(store, "ann", odd, "vec_id", "embedding"))
+      assert(jobs.nonEmpty, "the census saw no job at all")
+      assert(plans.isEmpty, "append planned an aggregate:\n" + plans.toArray.mkString("\n"))
+      assert(Similarity.loadIvfPq(store, "ann").encoded.count() == emb.count())
+    } finally { spark.listenerManager.unregister(listener); base.unpersist() }
+  }
+
   test("forgetFromIvfPq: a forgotten id never returns from a search at ANY manifest version; history shape preserved") {
     import spark.implicits._
     val emb = Fx.t(spark, sfDir, "embeddings")
