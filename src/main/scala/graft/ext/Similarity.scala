@@ -1,10 +1,14 @@
 package graft.ext
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StructField, StructType}
 
-import graft.functions.{AdcTable, EncodeAssign, IvfPqConsts}
+import graft.functions.{AdcTable, DotProduct, EncodeAssign, IvfPqConsts, ProbeAdc,
+  ProbeTables, RerankCosine, RerankVectors, TopKByScore}
 
 /** Approximate-nearest-neighbor / similarity search over an embedding
   * column (north-star extension; SURVEY §2.4 — no counterpart in the
@@ -28,10 +32,13 @@ import graft.functions.{AdcTable, EncodeAssign, IvfPqConsts}
 object Similarity {
 
   /** Hard cap on rows any API-boundary materializer may pull onto the
-    * driver (mmrRerank's shortlist collect): 2^20 rows ≈ tens of MB
-    * with vectors attached — the same explicit-budget rule as the
-    * connected-components union-find edge bound. */
-  private val MaxDriverShortlistRows: Long = 1L << 20
+    * driver (mmrRerank's shortlist collect; the driver-planned searches'
+    * |queries|·min(nprobe, C) probes; the collected rerank shortlist,
+    * above which the rerank switches to a distributed join): 2^20
+    * rows ≈ tens of MB with vectors attached — the same explicit-budget
+    * rule as the connected-components union-find edge bound. A
+    * constant, not a knob. */
+  private[ext] val MaxDriverShortlistRows: Long = 1L << 20
 
   /** Σ aᵢ·bᵢ over two array<double> columns (left-to-right, bit-stable).
     * Backed by the native codegen'd [[graft.functions.DotProduct]]
@@ -121,7 +128,7 @@ object Similarity {
     * O(k) buffer, combines map-side, and the exchange carries at most
     * `partitions × k` rows per query. Rank semantics are identical:
     * score desc, id asc on ties, rank = 1-based position. */
-  private def topKPerQuery(scored: DataFrame, id: Column, score: Column,
+  private[ext] def topKPerQuery(scored: DataFrame, id: Column, score: Column,
       scoreName: String, k: Int): DataFrame =
     scored.groupBy(col("query_id"))
       .agg(graft.functions.TopKByScore.topK(
@@ -331,6 +338,9 @@ object Similarity {
   final case class IvfIndex(assigned: DataFrame, centroids: DataFrame,
       backing: Option[DataFrame] = None) {
     def unpersist(): Unit = backing.foreach(_.unpersist())
+    /** The centroids as (id, vector) pairs: one C-row collect per index. */
+    private[ext] lazy val centroidPairs: Seq[(Int, Array[java.lang.Double])] =
+      Similarity.centroidPairs(centroids)
   }
 
   /** Build an IVF index with spherical k-means centroids.
@@ -595,24 +605,135 @@ object Similarity {
   /** PQ search with exact RERANK (the production IVF-PQ recipe): ADC
     * produces a `shortlist`-sized candidate set per query (cheap — m
     * lookups per candidate over the compressed codes), then ONLY those
-    * q×shortlist rows join back to the full-precision vectors for an
-    * exact cosine top-k. The corpus streams through both stages — the
-    * candidate set and the queries broadcast, full vectors are fetched
-    * for shortlist rows only. */
+    * candidates get an exact cosine for the top-k. The queries are
+    * collected once (duplicate or null ids refused by name) and score
+    * every encoded row through the one [[graft.functions.ProbeAdc]]
+    * pass, as a single bucket all of them probe; the shortlist then
+    * goes through [[rerank]]. Row for row the result is [[pqSearch]]'s
+    * shortlist reranked by exact cosine. */
   def pqSearchRerank(encoded: DataFrame, encIdCol: String, books: PqBooks,
       corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int, shortlist: Int = 50): DataFrame = {
     requireIntegralId(corpus, idCol, "pqSearchRerank")
-    val cand = pqSearch(encoded, encIdCol, books, queries, qIdCol, qVecCol, shortlist)
-      .select(col("query_id"), col("nn_id"))
-    val c = corpus.select(col(idCol).as("nn_id"),
-      l2Normalize(col(vecCol).cast("array<double>")).as("__cv"))
-    val q = queries.select(col(qIdCol).as("query_id"),
+    requireIntegralId(encoded, encIdCol, "pqSearchRerank")
+    val batch = collectQueries(queries, qIdCol, qVecCol, "pqSearchRerank")
+    val cand = adcShortlist(encoded.select(col(encIdCol).as("__id"), col("codes")), lit(0),
+      books, batch, batch.vecs.map(_ => Seq(0)), shortlist)
+    rerank(corpus, idCol, vecCol, batch, cand, shortlist, k)
+  }
+
+  /** A driver-planned search's query batch: ids as collected (Row
+    * values, with their type) and vectors normalized by [[l2Normalize]]
+    * itself in the collecting projection, so driver-side scores see the
+    * bits a plan would. */
+  private final case class QueryBatch(ids: IndexedSeq[Any], idType: DataType,
+      vecs: IndexedSeq[GenericArrayData]) {
+    /** The batch as a local (__q: batch position, query_id, __qv) frame. */
+    def frame(spark: SparkSession): DataFrame = spark.createDataFrame(
+      java.util.Arrays.asList(ids.indices.map(q =>
+        Row(q, ids(q), Option(vecs(q)).map(_.array.toSeq).orNull)): _*),
+      StructType(Seq(StructField("__q", IntegerType), StructField("query_id", idType),
+        StructField("__qv", ArrayType(DoubleType)))))
+  }
+
+  /** Collect the query batch of a driver-planned search. Refuses, by
+    * name, duplicate or null query ids (two vectors under one id have
+    * no well-defined neighbours). */
+  private def collectQueries(queries: DataFrame, qIdCol: String, qVecCol: String,
+      ctx: String): QueryBatch = {
+    val df = queries.select(col(qIdCol).as("query_id"),
       l2Normalize(col(qVecCol).cast("array<double>")).as("__qv"))
-    val scored = c.join(broadcast(cand), Seq("nn_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .withColumn("cosine", dot(col("__cv"), col("__qv")))
+    val rows = df.collect().toIndexedSeq
+    val ids = rows.map(_.get(0))
+    val distinct = ids.iterator.filter(_ != null).toSet.size
+    require(distinct == ids.length,
+      s"$ctx: query ids must be unique and non-null — got ${ids.length} " +
+        s"queries over $distinct distinct non-null '$qIdCol' values; two " +
+        "vectors under one id have no well-defined neighbours")
+    QueryBatch(ids, df.schema("query_id").dataType, rows.map(r =>
+      if (r.isNullAt(1)) null else new GenericArrayData(r.getSeq[Any](1).toArray)))
+  }
+
+  /** Each query's probes, picked on the driver as the bounded top-k
+    * aggregate would pick them: score `graft_dot(qv, cv)` desc, centroid
+    * id asc, null scores skipped. A query whose every score is null (a
+    * null vector, a null element) probes nothing. The |Q|·min(nprobe, C)
+    * probe rows live on the driver, so a batch with more than
+    * [[MaxDriverShortlistRows]] of them is refused by name before any
+    * scoring. */
+  private def probesOf(batch: QueryBatch, centroids: Seq[(Int, Array[java.lang.Double])],
+      nprobe: Int, ctx: String): IndexedSeq[Seq[Int]] = {
+    val perQuery = math.min(nprobe, centroids.size)
+    val probeRows = batch.ids.length.toLong * perQuery
+    require(probeRows <= MaxDriverShortlistRows,
+      s"$ctx: ${batch.ids.length} queries x $perQuery probes = $probeRows driver-side " +
+        s"probe rows exceed MaxDriverShortlistRows = $MaxDriverShortlistRows; search " +
+        "in smaller query batches (results are per query)")
+    val cvs = centroids.map { case (id, v) =>
+      (id.toLong, if (v == null) null else new GenericArrayData(v.map(x => x: Any)))
+    }
+    batch.vecs.map { qv =>
+      TopKByScore.best(cvs.iterator.flatMap { case (id, cv) =>
+        DotProduct.of(qv, cv) match {
+          case s: java.lang.Double => Some((s.doubleValue, id))
+          case _ => None
+        }
+      }, nprobe).map(_._2.toInt).distinct
+    }
+  }
+
+  /** The ADC shortlist of a collected batch over `codes` rows (`__id`,
+    * `codes`): ONE [[graft.functions.ProbeAdc]] projection, which scores
+    * each row against the queries probing its `bucket` (`probes(q)`:
+    * the buckets query q probes), with the probes and the queries' ADC
+    * tables ([[IvfPqConsts.adcTable]], built here) in one broadcast;
+    * then `inline` and the bounded top-k. Returns (query_id: batch
+    * position, nn_id). */
+  private def adcShortlist(codes: DataFrame, bucket: Column, books: PqBooks,
+      batch: QueryBatch, probes: IndexedSeq[Seq[Int]], shortlist: Int): DataFrame = {
+    val pq = ivfPqConsts(Nil, Some(books))
+    val probe = codes.sparkSession.sparkContext.broadcast(
+      ProbeTables(probes, batch.vecs.map(pq.adcTable)))
+    val scored = codes.select(col("__id"), ProbeAdc.column(bucket.cast("int"),
+        col("codes").cast("array<int>"), probe).as("__s"))
+      .select(col("__id"), inline(col("__s")))
+    topKPerQuery(scored, col("__id"), col("adc"), "adc", shortlist)
+      .select(col("query_id"), col("nn_id"))
+  }
+
+  /** Exact-cosine rerank of an ADC shortlist `cand` (query_id: batch
+    * position, nn_id), scoring `graft_dot(l2Normalize(vec), qv)`, then
+    * the bounded top-k: (query_id, nn_id, cosine, rank).
+    *
+    * The switch is the batch's |Q|·shortlist, known once the queries
+    * are collected. Up to [[MaxDriverShortlistRows]] the shortlist is
+    * collected, and it and the query vectors ride in one broadcast
+    * read by ONE [[graft.functions.RerankCosine]] projection over the
+    * corpus, which scores shortlisted rows only. Above it (a full-probe
+    * search with a corpus-sized shortlist, the exact form the contract
+    * queries gate on, reaches it at a few hundred thousand rows) the
+    * shortlist stays a frame: the corpus broadcast-joins it, then the
+    * batch's local query frame. The corpus never shuffles on either
+    * side. */
+  private def rerank(corpus: DataFrame, idCol: String, vecCol: String,
+      batch: QueryBatch, cand: DataFrame, shortlist: Int, k: Int): DataFrame = {
+    val spark = corpus.sparkSession
+    val nn = col(idCol).cast("long")
+    val cv = l2Normalize(col(vecCol).cast("array<double>"))
+    val scored =
+      if (batch.ids.length.toLong * shortlist <= MaxDriverShortlistRows) {
+        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(batch.idType)
+        val consts = spark.sparkContext.broadcast(new RerankVectors(
+          cand.collect().groupBy(_.getLong(1)).map { case (id, qs) => id -> qs.map(_.getInt(0)) },
+          batch.ids.map(toCatalyst).toArray, batch.vecs.toArray[ArrayData]))
+        corpus.select(nn.as("nn_id"), RerankCosine.column(nn, cv, consts, batch.idType).as("__r"))
+          .select(col("nn_id"), inline(col("__r")))
+      } else
+        corpus.select(nn.as("nn_id"), cv.as("__cv"))
+          .join(broadcast(cand.select(col("query_id").as("__q"), col("nn_id"))), Seq("nn_id"))
+          .join(broadcast(batch.frame(spark)), Seq("__q"))
+          .select(col("query_id"), col("nn_id"), dot(col("__cv"), col("__qv")).as("cosine"))
     topKPerQuery(scored, col("nn_id"), col("cosine"), "cosine", k)
   }
 
@@ -623,6 +744,10 @@ object Similarity {
   final case class IvfPqIndex(encoded: DataFrame, centroids: DataFrame,
       books: PqBooks, backing: Option[DataFrame] = None) {
     def unpersist(): Unit = backing.foreach(_.unpersist())
+    /** The centroids as (id, vector) pairs: one C-row collect per index,
+      * read by every search's probe selection and by append's encode. */
+    private[ext] lazy val centroidPairs: Seq[(Int, Array[java.lang.Double])] =
+      Similarity.centroidPairs(centroids)
   }
 
   /** FUSED centroid assignment + PQ encode over an id-keyed,
@@ -655,10 +780,14 @@ object Similarity {
   private def ivfPqKernel(spark: SparkSession,
       centroids: Seq[(Int, Array[java.lang.Double])],
       books: Option[PqBooks]): Broadcast[IvfPqConsts] =
-    spark.sparkContext.broadcast(IvfPqConsts(centroids,
+    spark.sparkContext.broadcast(ivfPqConsts(centroids, books))
+
+  private def ivfPqConsts(centroids: Seq[(Int, Array[java.lang.Double])],
+      books: Option[PqBooks]): IvfPqConsts =
+    IvfPqConsts(centroids,
       books.fold(Array.empty[Array[Array[Double]]])(_.books),
       books.fold(Array.empty[Array[Double]])(_.halfNormSq),
-      books.fold(0)(_.ds)))
+      books.fold(0)(_.ds))
 
   /** Trained centroids as the index's (centroid_id, __cv) table, ids
     * 0..C−1. */
@@ -673,7 +802,7 @@ object Similarity {
 
   /** A stored (centroid_id, __cv) table as kernel centroids — one
     * C-row collect. */
-  private def centroidPairs(centroids: DataFrame): Seq[(Int, Array[java.lang.Double])] =
+  private[ext] def centroidPairs(centroids: DataFrame): Seq[(Int, Array[java.lang.Double])] =
     centroids.select(col("centroid_id").cast("int"), col("__cv")).collect().toSeq.map { r =>
       require(!r.isNullAt(0), "IVF centroids table holds a null centroid_id")
       (r.getInt(0), if (r.isNullAt(1)) null else r.getSeq[java.lang.Double](1).toArray)
@@ -716,47 +845,56 @@ object Similarity {
   }
 
   /** IVF-PQ search — the production ANN recipe (the IVFADC shape,
-    * Jégou et al. 2011, re-expressed as DataFrame ops): the query
-    * probes its `nprobe` nearest buckets (broadcast probe join — the
-    * corpus never shuffles), every candidate in those buckets scores
-    * with m ADC table lookups over its codes, the bounded top-k heap
-    * keeps a `shortlist` per query, and ONLY those rows join back to
-    * full-precision vectors for the exact cosine top-k. Cost per
-    * query ≈ |corpus|·(nprobe/C) candidates × m lookups + `shortlist`
-    * exact dots — at 100 TB the scan shrinks by C/nprobe and the
-    * scored data is ~64× smaller than the vectors. */
+    * Jégou et al. 2011): each query probes its `nprobe` nearest
+    * buckets, every candidate in those buckets scores with m ADC table
+    * lookups over its codes, the bounded top-k heap keeps a `shortlist`
+    * per query, and ONLY those rows get an exact cosine for the final
+    * top-k.
+    *
+    * Everything query-sized is planned on the driver; the corpus-sized
+    * inputs each get one narrow kernel pass:
+    *  1. the query batch is collected once, normalized by
+    *     [[l2Normalize]] in the collecting projection; the probes
+    *     (|Q|·C dots against the index's memoized centroids, picked in
+    *     the top-k heap's order) and the ADC tables are computed on the
+    *     driver;
+    *  1. [[graft.functions.ProbeAdc]] over the encoded codes emits one
+    *     (query, adc) per query probing the row's bucket — the probes
+    *     and tables ride in one broadcast — then the shortlist top-k;
+    *  1. [[rerank]]: exact cosines for shortlisted rows only, then the
+    *     top-k. Up to [[MaxDriverShortlistRows]] |Q|·shortlist the
+    *     shortlist is collected and [[graft.functions.RerankCosine]]
+    *     scores it in one projection over the corpus; above it the
+    *     shortlist broadcast-joins the corpus instead.
+    *
+    * Jobs on the collected side: the query collect (none for a local
+    * batch), the centroid collect on an index's first search (C rows,
+    * memoized), two for the shortlist (its shuffle and its collect),
+    * and two when the returned frame runs — five in all for a loaded
+    * index and a local batch, against eight for the join-and-aggregate
+    * composition it replaced (SimilaritySpec keeps that composition as
+    * the reference and pins the two equal row for row, on both sides of
+    * the switch). No exchange touches the corpus or the codes except
+    * the two top-k aggregates', which carry at most
+    * partitions·shortlist (then ·k) rows per query.
+    *
+    * Bounds: |Q|·min(nprobe, C) ≤ [[MaxDriverShortlistRows]] probe
+    * rows, refused by name before any scoring; duplicate or null query
+    * ids are refused too. Cost per query ≈ |corpus|·(nprobe/C)
+    * candidates × m lookups + `shortlist` exact dots; the driver does
+    * |Q|·(C + ksub)·dim multiply-adds. Queries with a null vector, or a
+    * null element, probe nothing and are absent from the result. */
   def ivfPqSearch(index: IvfPqIndex, corpus: DataFrame, idCol: String,
       vecCol: String, queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int, nprobe: Int = 4, shortlist: Int = 50): DataFrame = {
     requireIntegralId(corpus, idCol, "ivfPqSearch")
-    val books = index.books
-    val qv = l2Normalize(col(qVecCol).cast("array<double>"))
-    val q = queries.select(col(qIdCol).as("query_id"), qv.as("__qv"))
-    // probe selection (bounded top-k) + the per-query ADC table — both
-    // query-side columns, so the m×ksub dot products run once per
-    // (query, probe) row, never per candidate
-    val qc = q.crossJoin(broadcast(index.centroids))
-      .withColumn("__csim", dot(col("__qv"), col("__cv")))
-    val table = AdcTable.column(col("__qv"),
-      ivfPqKernel(queries.sparkSession, Nil, Some(books)))
-    val probes = topKPerQuery(qc, col("centroid_id"), col("__csim"), "__csim", nprobe)
-      .select(col("query_id"), col("nn_id").cast("int").as("centroid_id"))
-      .join(q, Seq("query_id"))
-      .select(col("query_id"), col("centroid_id"), table.as("__T"))
-    val adc = (0 until books.m)
-      .map(j => element_at(element_at(col("__T"), j + 1),
-        element_at(col("codes"), j + 1) + 1))
-      .reduce(_ + _)
-    val scored = index.encoded.join(broadcast(probes), Seq("centroid_id"))
-      .withColumn("__adc", adc)
-    val cand = topKPerQuery(scored, col("__id"), col("__adc"), "__adc", shortlist)
-      .select(col("query_id"), col("nn_id"))
-    val c = corpus.select(col(idCol).as("nn_id"),
-      l2Normalize(col(vecCol).cast("array<double>")).as("__cv"))
-    val reranked = c.join(broadcast(cand), Seq("nn_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .withColumn("cosine", dot(col("__cv"), col("__qv")))
-    topKPerQuery(reranked, col("nn_id"), col("cosine"), "cosine", k)
+    require(k >= 1 && nprobe >= 1 && shortlist >= 1,
+      s"ivfPqSearch: need k, nprobe and shortlist >= 1 — got k=$k " +
+        s"nprobe=$nprobe shortlist=$shortlist")
+    val batch = collectQueries(queries, qIdCol, qVecCol, "ivfPqSearch")
+    val cand = adcShortlist(index.encoded, col("centroid_id"), index.books, batch,
+      probesOf(batch, index.centroidPairs, nprobe, "ivfPqSearch"), shortlist)
+    rerank(corpus, idCol, vecCol, batch, cand, shortlist, k)
   }
 
   /** Commit the index GROUP: one manifest row naming the exact
@@ -880,10 +1018,14 @@ object Similarity {
     * corpus participation. */
   private[graft] def encodeAssign(batch: DataFrame, idCol: String,
       vecCol: String, centroids: DataFrame, books: PqBooks): DataFrame =
+    encodeBatch(batch, idCol, vecCol, centroidPairs(centroids), books)
+
+  private def encodeBatch(batch: DataFrame, idCol: String, vecCol: String,
+      centroids: Seq[(Int, Array[java.lang.Double])], books: PqBooks): DataFrame =
     fusedEncodeAssign(
       batch.select(col(idCol).as("__id"),
         l2Normalize(col(vecCol).cast("array<double>")).as("__v")),
-      centroidPairs(centroids), books)
+      centroids, books)
 
   /** Incremental index MAINTENANCE (r15 verdict next-round item 6) —
     * UPSERT semantics (r16 verdict item 1): encode a document batch
@@ -933,7 +1075,7 @@ object Similarity {
         "one batch have no well-defined winner (dedupe the batch, or " +
         "split the re-send into a later batch: across batches " +
         "replace-by-id applies)")
-    val appended = encodeAssign(batch, idCol, vecCol, cur.centroids, cur.books)
+    val appended = encodeBatch(batch, idCol, vecCol, cur.centroidPairs, cur.books)
     // replace-by-id: retained = old rows whose id is NOT re-sent (the
     // collected batch id set broadcasts; the codes scan never shuffles)
     val retained = cur.encoded.join(broadcast(spark.createDataFrame(
@@ -1024,15 +1166,20 @@ object Similarity {
     * ⌊10⁶·Σ overlap/(n_eval·k)⌋.
     *
     * Scale shape: per DISTINCT (encoded_v, centroids_v, books_v)
-    * triple, ONE eval-sized collect (2·nEval id rows), one brute-force
-    * pass of the version-restricted corpus against nEval broadcast
-    * queries (the deliberately-priced exact audit, eval-budget-bounded
-    * like lshRecallAudit's maxDocs), and one probe-bounded index
-    * search. Manifest versions naming the same triple (a forget
-    * re-commits the current one) share that evaluation, since member
-    * snapshots are immutable; every version still gets its row.
-    * Versions are few (one per save/append/forget); the loop is
-    * driver-side by design. */
+    * triple, ONE eval-sized id collect (nEval rows), one persisted
+    * version-restricted corpus (released on every exit path), one
+    * brute-force pass of it against nEval broadcast queries (the
+    * deliberately-priced exact audit, eval-budget-bounded like
+    * lshRecallAudit's maxDocs), and one [[ivfPqSearch]] — whose probes
+    * and ADC tables live on the driver, and whose shortlist does too
+    * while nEval·shortlist stays within [[MaxDriverShortlistRows]] —
+    * joined to the truth in one overlap action. The truth is
+    * recomputed per triple: a version's eval set and corpus restriction
+    * differ, and nothing reuses one version's truth for the next. Manifest versions naming
+    * the same triple (a forget re-commits the current one) share that
+    * evaluation, since member snapshots are immutable; every version
+    * still gets its row. Versions are few (one per save/append/forget);
+    * the loop is driver-side by design. */
   def ivfPqRecallDrift(store: graft.core.TableStore, name: String,
       corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, nprobe: Int = 1, nEval: Int = 50,
@@ -1057,17 +1204,18 @@ object Similarity {
       val inIndex = corpus.join(
         broadcast(idx.encoded.select(col("__id").as(idCol))), Seq(idCol))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      inIndex.count()
-      val evalQ = inIndex.filter(col(idCol).isin(ids: _*))
-      val truth = bruteForceTopK(inIndex, idCol, vecCol,
-        evalQ, idCol, vecCol, k)
-      val cand = ivfPqSearch(idx, inIndex, idCol, vecCol,
-        evalQ, idCol, vecCol, k, nprobe, shortlist)
-      val overlap = rankedOverlap(truth, cand, "query_id", "nn_id", k)
-        .agg(sum(col("n_overlap")), count(lit(1))).head()
-      val (hits, nq) = (overlap.getLong(0), overlap.getLong(1))
-      inIndex.unpersist()
-      (nq, hits * 1000000L / (nq * k))
+      try {
+        inIndex.count()
+        val evalQ = inIndex.filter(col(idCol).isin(ids: _*))
+        val truth = bruteForceTopK(inIndex, idCol, vecCol,
+          evalQ, idCol, vecCol, k)
+        val cand = ivfPqSearch(idx, inIndex, idCol, vecCol,
+          evalQ, idCol, vecCol, k, nprobe, shortlist)
+        val overlap = rankedOverlap(truth, cand, "query_id", "nn_id", k)
+          .agg(sum(col("n_overlap")), count(lit(1))).head()
+        val (hits, nq) = (overlap.getLong(0), overlap.getLong(1))
+        (nq, hits * 1000000L / (nq * k))
+      } finally graft.util.Caches.release(inIndex)
     }
     val mvs = store.versions(s"${name}_manifest")
     val triples = manifestTriples(store, name, mvs)
@@ -1080,24 +1228,28 @@ object Similarity {
   }
 
   /** IVF search: each query probes its `nprobe` nearest centroids and
-    * scans only those buckets. Equi-join on centroid_id ⇒ bucketed,
-    * shuffle-bounded; recall grows with nprobe. */
+    * scans only those buckets; recall grows with nprobe. The queries
+    * are collected and their probes picked on the driver, as
+    * [[ivfPqSearch]] picks them; the (query, probe) rows then
+    * broadcast-join the assigned corpus on centroid_id, so the corpus
+    * never shuffles for candidates. Refused by name: |Q|·min(nprobe, C)
+    * probe rows over [[MaxDriverShortlistRows]], and duplicate or null
+    * query ids. */
   def ivfSearch(index: IvfIndex, queries: DataFrame, qIdCol: String,
       qVecCol: String, k: Int, nprobe: Int = 4): DataFrame = {
-    val q = queries.select(col(qIdCol).as("query_id"),
-      l2Normalize(col(qVecCol).cast("array<double>")).as("__qv"))
-    val qc = q.crossJoin(broadcast(index.centroids))
-      .withColumn("__csim", dot(col("__qv"), col("__cv")))
-    // nprobe nearest centroids per query via the same bounded top-k
-    // aggregate (q × C rows — small, but keeps the plan window-free);
-    // the query vector re-joins by id afterwards
-    val probes = topKPerQuery(qc, col("centroid_id"), col("__csim"), "__csim", nprobe)
-      .select(col("query_id"), col("nn_id").cast("int").as("centroid_id"))
-      .join(q, Seq("query_id"))
-      .select(col("query_id"), col("__qv"), col("centroid_id"))
-    // probes (queries × nprobe rows) broadcast: the corpus-side bucket
-    // scan never shuffles — candidate generation is a broadcast join
-    val scored = index.assigned.join(broadcast(probes), Seq("centroid_id"))
+    require(k >= 1 && nprobe >= 1,
+      s"ivfSearch: need k and nprobe >= 1 — got k=$k nprobe=$nprobe")
+    val batch = collectQueries(queries, qIdCol, qVecCol, "ivfSearch")
+    val probes = probesOf(batch, index.centroidPairs, nprobe, "ivfSearch")
+    // a query with probes has a non-null vector
+    val rows = for { q <- batch.ids.indices; c <- probes(q) }
+      yield Row(batch.ids(q), batch.vecs(q).array.toSeq, c)
+    val probeRows = queries.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), StructType(Seq(
+        StructField("query_id", batch.idType),
+        StructField("__qv", ArrayType(DoubleType)),
+        StructField("centroid_id", IntegerType))))
+    val scored = index.assigned.join(broadcast(probeRows), Seq("centroid_id"))
       .withColumn("cosine", dot(col("__qv"), col("__v")))
     topKPerQuery(scored, col("__id"), col("cosine"), "cosine", k)
   }

@@ -38,19 +38,8 @@ case class DotProduct(left: Expression, right: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      s += x.getDouble(i) * y.getDouble(i)
-      i += 1
-    }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotProduct.of(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -71,6 +60,24 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
+}
+
+object DotProduct {
+  /** The expression's value outside a plan: null when either side is
+    * null, else the sum above (null at a null element). */
+  def of(x: ArrayData, y: ArrayData): Any =
+    if (x == null || y == null) null
+    else {
+      val n = math.min(x.numElements(), y.numElements())
+      var s = 0.0
+      var i = 0
+      while (i < n) {
+        if (x.isNullAt(i) || y.isNullAt(i)) return null
+        s += x.getDouble(i) * y.getDouble(i)
+        i += 1
+      }
+      s
+    }
 }
 
 /** Column-API surface for the native expressions. */

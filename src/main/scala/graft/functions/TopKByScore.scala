@@ -67,15 +67,7 @@ case class TopKByScore(
     mutable.TreeSet.empty[(Double, Long)](TopKByScore.WorstFirst)
 
   private def insert(buf: mutable.TreeSet[(Double, Long)],
-      e: (Double, Long)): Unit = {
-    // buf is ordered worst-first, so buf.head is the current k-th best:
-    // a saturated buffer rejects non-improving candidates in O(log k)
-    // without add/remove churn
-    if (buf.size < k) { buf += e; () }
-    else if (TopKByScore.WorstFirst.gt(e, buf.head) && buf.add(e)) {
-      buf -= buf.head; ()
-    }
-  }
+      e: (Double, Long)): Unit = TopKByScore.insert(buf, e, k)
 
   override def update(buf: mutable.TreeSet[(Double, Long)],
       input: InternalRow): mutable.TreeSet[(Double, Long)] = {
@@ -137,6 +129,27 @@ object TopKByScore {
         if (c != 0) c else java.lang.Long.compare(b._2, a._2)
       }
     }
+
+  private def insert(buf: mutable.TreeSet[(Double, Long)],
+      e: (Double, Long), k: Int): Unit = {
+    // buf is ordered worst-first, so buf.head is the current k-th best:
+    // a saturated buffer rejects non-improving candidates in O(log k)
+    // without add/remove churn
+    if (buf.size < k) { buf += e; () }
+    else if (WorstFirst.gt(e, buf.head) && buf.add(e)) {
+      buf -= buf.head; ()
+    }
+  }
+
+  /** One group's result computed outside a plan, for a candidate set
+    * small enough to rank on the driver: the best k of `pairs`,
+    * best-first, under the aggregate's order and collapse rules. */
+  def best(pairs: Iterator[(Double, Long)], k: Int): Seq[(Double, Long)] = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    val buf = mutable.TreeSet.empty[(Double, Long)](WorstFirst)
+    pairs.foreach(insert(buf, _, k))
+    buf.toSeq.reverse
+  }
 
   /** Column form: bounded top-k of (score, id) per group, best-first.
     * Use via [[graft.ext.Similarity]]'s search paths. */

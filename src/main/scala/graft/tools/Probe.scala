@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.{Session, SparkEntry}
 import java.nio.file.{Files, Paths}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
@@ -15,7 +16,9 @@ import scala.jdk.CollectionConverters._
   *  - `jobs <names>`: one warm run, then a census of the jobs one more
   *    run through the `noop` sink submits (a query whose cost is
   *    scheduling floor shows many short jobs; one whose cost is data
-  *    shows few jobs owning the wall time).
+  *    shows few jobs owning the wall time) and of the classes it
+  *    compiles (a warm run that still compiles is missing the
+  *    generated-class cache).
   *  - `plan <round>/<suffix> <names>`: the formatted initial plan.
   *  - `final-plan <round>/<suffix> <names>`: the formatted plan after
   *    the query ran, the only place AQE's runtime decisions
@@ -52,6 +55,31 @@ object Probe {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Janino compiles while a body ran: how many classes, and their
+    * generated source bytes when known exactly (None once the process
+    * has compiled more classes than the metric's reservoir keeps). */
+  final case class Compiles(classes: Long, sourceBytes: Option[Long])
+
+  /** The classes compiled while `body` runs, read from Spark's
+    * `CodegenMetrics` source-size histogram (one sample per Janino
+    * compile). The metric is this JVM's, so the session must be local:
+    * a cluster's executors compile in their own JVMs. Source bytes are
+    * the growth of the histogram's sample sum, exact while the
+    * reservoir still holds every sample of the process. */
+  def compilesDuring[T](spark: SparkSession)(body: => T): (T, Compiles) = {
+    require(spark.sparkContext.isLocal,
+      "compilesDuring reads this JVM's CodegenMetrics; a cluster session compiles on executors")
+    val size = CodegenMetrics.METRIC_SOURCE_CODE_SIZE
+    def sum: Long = size.getSnapshot.getValues.sum
+    val (n0, b0) = (size.getCount, sum)
+    val out = body
+    val (n1, b1) = (size.getCount, sum)
+    (out, Compiles(n1 - n0, Option.when(n1 <= ReservoirSize)(b1 - b0)))
+  }
+
+  /** Samples a Dropwizard `ExponentiallyDecayingReservoir` keeps. */
+  private val ReservoirSize = 1028
+
   def plan(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
@@ -71,9 +99,10 @@ object Probe {
         noop(fn(spark, sfDir))
         spark.catalog.clearCache()
         val t0 = System.nanoTime()
-        val (_, js) = jobsDuring(spark)(noop(fn(spark, sfDir)))
+        val ((_, js), cg) = compilesDuring(spark)(jobsDuring(spark)(noop(fn(spark, sfDir))))
         println(f"[jobs] $name: ${js.size} jobs, ${(System.nanoTime() - t0) / 1e9}%.2f s wall, " +
-          f"${js.map(_.ms).sum} ms summed job time")
+          f"${js.map(_.ms).sum} ms summed job time, ${cg.classes} classes compiled " +
+          s"(${cg.sourceBytes.fold("?")(_.toString)} source bytes)")
         js.foreach(j => println(f"[jobs]   job ${j.id}%4d ${j.ms}%7d ms  ${j.stage} [${j.tasks} tasks]"))
         spark.catalog.clearCache()
       }

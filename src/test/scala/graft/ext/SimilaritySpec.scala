@@ -2,10 +2,289 @@ package graft.ext
 
 import graft.SparkSpec
 import graft.core.Fx
+import graft.functions.{AdcTable, IvfPqConsts}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
+
+  // ------------------------------------------ composed search references
+  // The join-and-aggregate forms the driver-planned searches replaced:
+  // probes by a top-k aggregate re-joined to the queries, the ADC sum
+  // as m `element_at` lookups over a broadcast join, and the rerank as
+  // two broadcast joins and a `graft_dot`. The searches must equal
+  // them row for row.
+
+  private def composedQueries(queries: DataFrame, qIdCol: String, qVecCol: String) =
+    queries.select(col(qIdCol).as("query_id"),
+      Similarity.l2Normalize(col(qVecCol).cast("array<double>")).as("__qv"))
+
+  private def composedProbes(q: DataFrame, centroids: DataFrame, nprobe: Int) =
+    Similarity.topKPerQuery(q.crossJoin(broadcast(centroids))
+        .withColumn("__csim", Similarity.dot(col("__qv"), col("__cv"))),
+      col("centroid_id"), col("__csim"), "__csim", nprobe)
+      .select(col("query_id"), col("nn_id").cast("int").as("centroid_id"))
+      .join(q, Seq("query_id"))
+
+  private def composedRerank(cand: DataFrame, q: DataFrame, corpus: DataFrame,
+      idCol: String, vecCol: String, k: Int) = {
+    val c = corpus.select(col(idCol).as("nn_id"),
+      Similarity.l2Normalize(col(vecCol).cast("array<double>")).as("__cv"))
+    Similarity.topKPerQuery(c.join(broadcast(cand), Seq("nn_id"))
+        .join(broadcast(q), Seq("query_id"))
+        .withColumn("cosine", Similarity.dot(col("__cv"), col("__qv"))),
+      col("nn_id"), col("cosine"), "cosine", k)
+  }
+
+  private def adcSum(m: Int) = (0 until m)
+    .map(j => element_at(element_at(col("__T"), j + 1),
+      element_at(col("codes"), j + 1) + 1))
+    .reduce(_ + _)
+
+  private def composedIvfPqSearch(index: Similarity.IvfPqIndex, corpus: DataFrame,
+      idCol: String, vecCol: String, queries: DataFrame, qIdCol: String,
+      qVecCol: String, k: Int, nprobe: Int, shortlist: Int): DataFrame = {
+    val books = index.books
+    val q = composedQueries(queries, qIdCol, qVecCol)
+    val table = AdcTable.column(col("__qv"), spark.sparkContext.broadcast(
+      IvfPqConsts(Nil, books.books, books.halfNormSq, books.ds)))
+    val probes = composedProbes(q, index.centroids, nprobe)
+      .select(col("query_id"), col("centroid_id"), table.as("__T"))
+    val scored = index.encoded.join(broadcast(probes), Seq("centroid_id"))
+      .withColumn("__adc", adcSum(books.m))
+    val cand = Similarity.topKPerQuery(scored, col("__id"), col("__adc"), "__adc", shortlist)
+      .select(col("query_id"), col("nn_id"))
+    composedRerank(cand, q, corpus, idCol, vecCol, k)
+  }
+
+  private def composedPqSearchRerank(encoded: DataFrame, encIdCol: String,
+      books: Similarity.PqBooks, corpus: DataFrame, idCol: String, vecCol: String,
+      queries: DataFrame, qIdCol: String, qVecCol: String, k: Int, shortlist: Int) = {
+    val cand = Similarity.pqSearch(encoded, encIdCol, books, queries, qIdCol, qVecCol, shortlist)
+      .select(col("query_id"), col("nn_id"))
+    composedRerank(cand, composedQueries(queries, qIdCol, qVecCol), corpus, idCol, vecCol, k)
+  }
+
+  private def composedIvfSearch(index: Similarity.IvfIndex, queries: DataFrame,
+      qIdCol: String, qVecCol: String, k: Int, nprobe: Int) = {
+    val probes = composedProbes(composedQueries(queries, qIdCol, qVecCol),
+      index.centroids, nprobe).select(col("query_id"), col("__qv"), col("centroid_id"))
+    Similarity.topKPerQuery(index.assigned.join(broadcast(probes), Seq("centroid_id"))
+        .withColumn("cosine", Similarity.dot(col("__qv"), col("__v"))),
+      col("__id"), col("cosine"), "cosine", k)
+  }
+
+  /** (query_id, nn_id, score bits, rank): NaN and -0.0 compare exactly. */
+  private def ranked(df: DataFrame): Set[(Long, Long, Long, Int)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3))).toSet
+
+  private def withConf[T](kvs: (String, String)*)(body: => T): T =
+    try { kvs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
+    finally kvs.foreach { case (k, _) => spark.conf.unset(k) }
+
+  private val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  /** The error conditions along a failure's cause chain. */
+  private def conditions(body: => Any): Seq[String] = {
+    val e = intercept[Throwable](body)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).collect {
+      case t: org.apache.spark.SparkThrowable if t.getCondition != null => t.getCondition
+    }.toSeq
+  }
+
+  // A hand-made IVF-PQ index over 4-dim vectors: m = 2 subspaces ×
+  // ksub = 3 codes (code 2 of subspace 0 duplicates code 0), four
+  // centroids of which 1 and 2 coincide (a probe tie) and 3 holds no
+  // rows (a probed empty bucket). Codes are chosen, not encoded: ids
+  // 2/3 share codes (an ADC tie) and vectors (a rerank tie); 9–14
+  // and 17 carry a null code, an out-of-range code, a negative code
+  // (index -1: the last entry), a short code array, null codes,
+  // Int.MaxValue (+1 overflows) and -1 (index 0); 15/16 sit in a
+  // bucket no centroid has and in a null bucket.
+  private val synthBooks = Similarity.PqBooks(4, 2, 3, Array(
+    Array(Array(1.0, 0.0), Array(0.0, 1.0), Array(1.0, 0.0)),
+    Array(Array(0.0, 0.0), Array(-1.0, 0.5), Array(0.5, 0.5))))
+  // fail element_at or + 1 under ANSI; without ANSI, 14's index wraps
+  // to Int.MinValue, which element_at reads out of bounds with (the
+  // kernel reads null), and 17's index 0 fails in both modes
+  private val ansiErrors = Map(10L -> "INVALID_ARRAY_INDEX_IN_ELEMENT_AT",
+    12L -> "INVALID_ARRAY_INDEX_IN_ELEMENT_AT", 14L -> "ARITHMETIC_OVERFLOW",
+    17L -> "INVALID_INDEX_OF_ZERO")
+
+  private def vecFrame(rows: Seq[(Long, Option[Seq[Option[Double]]])]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows.map { case (i, v) =>
+      Row(i, v.map(_.map(_.map(Double.box).orNull)).orNull) }: _*),
+      StructType(Seq(StructField("id", LongType), StructField("vec", ArrayType(DoubleType)))))
+
+  private def full(xs: Double*): Option[Seq[Option[Double]]] = Some(xs.map(Some(_)))
+
+  private lazy val synthEncoded: DataFrame = spark.createDataFrame(
+    java.util.Arrays.asList(Seq[(Long, Integer, Seq[Integer])](
+      (1L, 0, Seq(0, 1)), (2L, 0, Seq(1, 2)), (3L, 0, Seq(1, 2)), (4L, 1, Seq(2, 0)),
+      (5L, 1, Seq(0, 0)), (6L, 2, Seq(1, 1)), (7L, 2, Seq(0, 2)), (8L, 0, Seq(2, 2)),
+      (9L, 0, Seq(null, 1)), (10L, 1, Seq(5, 0)), (11L, 2, Seq(-2, 0)),
+      (12L, 0, Seq(0)), (13L, 1, null), (14L, 2, Seq(Int.MaxValue, 0)),
+      (15L, 99, Seq(0, 0)), (16L, null, Seq(0, 0)), (17L, 1, Seq(-1, 0))
+    ).map { case (i, c, codes) => Row(i, c, codes) }: _*),
+    StructType(Seq(StructField("__id", LongType), StructField("centroid_id", IntegerType),
+      StructField("codes", ArrayType(IntegerType)))))
+
+  private lazy val synthIndex = Similarity.IvfPqIndex(synthEncoded,
+    Seq((0, Seq(1.0, 0.0, 0.0, 0.0)), (1, Seq(0.0, 1.0, 0.0, 0.0)),
+      (2, Seq(0.0, 1.0, 0.0, 0.0)), (3, Seq(0.0, 0.0, 0.0, 1.0))).toDF("centroid_id", "__cv"),
+    synthBooks)
+  private def indexWithout(ids: Iterable[Long]) =
+    synthIndex.copy(encoded = synthEncoded.filter(!col("__id").isin(ids.toSeq: _*)))
+  private lazy val ansiSafeIndex = indexWithout(ansiErrors.keys)
+
+  private lazy val synthCorpus = vecFrame(Seq(
+    1L -> full(1, 0, 0, 0), 2L -> full(0.6, 0.8, 0, 0), 3L -> full(0.6, 0.8, 0, 0),
+    4L -> full(0, 1, 0, 0), 5L -> full(0, 0, 0, 0), 6L -> full(0, 1, 1, 0), 7L -> None,
+    8L -> Some(Seq(Some(1.0), None, Some(0.0), Some(0.0))), 9L -> full(1, 1, 1, 1),
+    10L -> full(0, 0, 1, 0), 11L -> full(1, 0, 1, 0), 12L -> full(0.5, 0.5, 0, 0),
+    13L -> full(2, 0, 0, 0), 14L -> full(0, 0, 0, 1), 15L -> full(1, 0, 0, 0),
+    16L -> full(1, 0, 0, 0), 20L -> full(1, 0, 0, 0)))
+
+  // a zero vector, a null vector, a null element; 104 ties centroids
+  // 1 and 2; 105 ties every centroid at 0; 106 probes the empty bucket
+  private lazy val synthQueries = vecFrame(Seq(
+    100L -> full(1, 0, 0, 0), 101L -> full(0, 0, 0, 0), 102L -> None,
+    103L -> Some(Seq(Some(1.0), None, Some(0.0), Some(0.0))), 104L -> full(0, 1, 0, 0),
+    105L -> full(0, 0, 1, 0), 106L -> full(0, 0, 0, 1)))
+
+  test("ivfPqSearch == the composed join-and-aggregate search, row for row: ties, degenerate queries, empty and unprobed buckets, bad codes; codegen and interpreted, ANSI on and off") {
+    // (nprobe, shortlist, k): nprobe >= C = 4 and shortlists larger
+    // than the probed rows included
+    val shapes = Seq((1, 1, 1), (1, 2, 2), (2, 3, 2), (4, 100, 5), (10, 4, 3))
+    def compare(index: Similarity.IvfPqIndex): Unit = shapes.foreach { case (nprobe, shortlist, k) =>
+      val expected = ranked(composedIvfPqSearch(index, synthCorpus, "id", "vec",
+        synthQueries, "id", "vec", k, nprobe, shortlist))
+      val got = ranked(Similarity.ivfPqSearch(index, synthCorpus, "id", "vec",
+        synthQueries, "id", "vec", k, nprobe, shortlist))
+      assert(got == expected, s"nprobe=$nprobe shortlist=$shortlist k=$k")
+      assert(expected.map(_._1) == Set(100L, 101L, 104L, 105L, 106L) ||
+        (nprobe == 1 && expected.map(_._1) == Set(100L, 101L, 104L, 105L)),
+        s"degenerate queries must be absent, the rest present: $expected")
+    }
+    // each failing code fails both forms with element_at's / +'s error
+    def failures(failing: Map[Long, String]): Unit = failing.foreach { case (id, want) =>
+      val idx = indexWithout(ansiErrors.keys.filter(_ != id))
+      val expected = conditions(composedIvfPqSearch(idx, synthCorpus, "id", "vec",
+        synthQueries, "id", "vec", 3, 4, 100).collect())
+      val got = conditions(Similarity.ivfPqSearch(idx, synthCorpus, "id", "vec",
+        synthQueries, "id", "vec", 3, 4, 100).collect())
+      assert(expected.contains(want) && got.contains(want), s"id $id: $expected vs $got")
+    }
+    for (codegen <- Seq(true, false)) {
+      val conf = if (codegen) Nil else interpreted
+      withConf(conf :+ ("spark.sql.ansi.enabled" -> "false"): _*) {
+        compare(indexWithout(Seq(14L, 17L)))
+        failures(ansiErrors.filter(_._1 == 17L))
+      }
+      withConf(conf :+ ("spark.sql.ansi.enabled" -> "true"): _*) {
+        compare(ansiSafeIndex)
+        failures(ansiErrors)
+      }
+    }
+  }
+
+  test("ivfSearch and pqSearchRerank == their composed forms, row for row") {
+    val emb = Fx.t(spark, sfDir, "embeddings")
+    val queries = emb.filter($"vec_id" < 7)
+    val idx = Similarity.ivfBuild(emb, "vec_id", "embedding", nCentroids = 8)
+    try {
+      Seq((1, 5), (3, 10), (8, 10)).foreach { case (nprobe, k) =>
+        val got = ranked(Similarity.ivfSearch(idx, queries, "vec_id", "embedding", k, nprobe))
+        assert(got.nonEmpty && got == ranked(composedIvfSearch(idx, queries,
+          "vec_id", "embedding", k, nprobe)), s"ivfSearch nprobe=$nprobe")
+      }
+      val books = Similarity.pqSeededBooks(dim = 64, m = 8, ksub = 16)
+      val enc = Similarity.pqEncode(emb, "vec_id", "embedding", books)
+      val got = ranked(Similarity.pqSearchRerank(enc, "vec_id", books, emb,
+        "vec_id", "embedding", queries, "vec_id", "embedding", k = 10, shortlist = 30))
+      assert(got.size == 70 && got == ranked(composedPqSearchRerank(enc, "vec_id", books,
+        emb, "vec_id", "embedding", queries, "vec_id", "embedding", 10, 30)))
+    } finally idx.unpersist()
+  }
+
+  test("driver-planned searches refuse duplicate or null query ids, by name") {
+    val dup = vecFrame(Seq(1L -> full(1, 0, 0, 0), 1L -> full(0, 1, 0, 0)))
+    val withNull = vecFrame(Seq(1L -> full(1, 0, 0, 0))).union(
+      spark.createDataFrame(java.util.Arrays.asList(Row(null, Seq(0.0, 1.0, 0.0, 0.0))),
+        StructType(Seq(StructField("id", LongType), StructField("vec", ArrayType(DoubleType))))))
+    for (q <- Seq(dup, withNull)) {
+      val e = intercept[IllegalArgumentException] {
+        Similarity.ivfPqSearch(synthIndex, synthCorpus, "id", "vec", q, "id", "vec", 2)
+      }
+      assert(e.getMessage.contains("ivfPqSearch") && e.getMessage.contains("unique"), e.getMessage)
+    }
+  }
+
+  test("ivfPqSearch and pqSearchRerank == their composed forms on both sides of the collected-rerank bound") {
+    val q = vecFrame(Seq(1L -> full(1, 0, 0, 0), 2L -> full(0, 1, 0, 0)))
+    val atBound = (Similarity.MaxDriverShortlistRows / 2).toInt
+    for (shortlist <- Seq(atBound, atBound + 1)) {
+      val collected = shortlist == atBound
+      def kernelPath(df: DataFrame) = df.queryExecution.analyzed.toString.contains("graft_rerank_cosine")
+      val ivfPq = Similarity.ivfPqSearch(ansiSafeIndex, synthCorpus, "id", "vec", q, "id", "vec",
+        k = 3, nprobe = 4, shortlist = shortlist)
+      assert(kernelPath(ivfPq) == collected, s"shortlist=$shortlist")
+      assert(ranked(ivfPq) == ranked(composedIvfPqSearch(ansiSafeIndex, synthCorpus, "id", "vec",
+        q, "id", "vec", 3, 4, shortlist)), s"ivfPqSearch shortlist=$shortlist")
+      val pq = Similarity.pqSearchRerank(ansiSafeIndex.encoded, "__id", synthBooks, synthCorpus,
+        "id", "vec", q, "id", "vec", k = 3, shortlist = shortlist)
+      assert(kernelPath(pq) == collected, s"shortlist=$shortlist")
+      val want = ranked(composedPqSearchRerank(ansiSafeIndex.encoded, "__id", synthBooks,
+        synthCorpus, "id", "vec", q, "id", "vec", 3, shortlist))
+      assert(want.size == 6 && ranked(pq) == want, s"pqSearchRerank shortlist=$shortlist")
+    }
+  }
+
+  test("IVF searches refuse a batch whose probe rows exceed MaxDriverShortlistRows, by name, before scoring") {
+    // C = 1024 centroids at full probe: 1024 queries sit at the bound
+    val c = 1024
+    val centroids = (0 until c).map(i => (i, Seq(1.0, i.toDouble / c, 0.0, 0.0)))
+      .toDF("centroid_id", "__cv")
+    val pqIndex = ansiSafeIndex.copy(centroids = centroids)
+    def queries(n: Int) = vecFrame((0 until n).map(i => i.toLong -> full(1, 0, i, 0)))
+    val over = queries(c + 1)
+    val (errors, jobs) = graft.tools.Probe.jobsDuring(spark)(Seq(
+      intercept[IllegalArgumentException](Similarity.ivfPqSearch(pqIndex, synthCorpus,
+        "id", "vec", over, "id", "vec", k = 1, nprobe = c)),
+      intercept[IllegalArgumentException](Similarity.ivfSearch(
+        Similarity.IvfIndex(synthCorpus.select(col("id").as("__id"), lit(0).as("centroid_id"),
+          col("vec").as("__v")), centroids), over, "id", "vec", k = 1, nprobe = c + 5))))
+    errors.foreach(e => assert(e.getMessage.contains("1025 queries x 1024 probes") &&
+      e.getMessage.contains("MaxDriverShortlistRows = 1048576"), e.getMessage))
+    assert(jobs.isEmpty, s"a refused local batch must run no job: $jobs")
+    // at the bound it runs
+    assert(Similarity.ivfPqSearch(pqIndex, synthCorpus, "id", "vec", queries(c), "id", "vec",
+      k = 1, nprobe = c).count() == c)
+  }
+
+  test("a search of a loaded index with a local query batch runs at most five Spark jobs") {
+    val emb = Fx.t(spark, sfDir, "embeddings")
+    val books = Similarity.pqSeededBooks(dim = 64, m = 8, ksub = 16)
+    val store = new graft.core.TableStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-annsearchjobs").toString)
+    val idx = Similarity.ivfPqBuild(emb, "vec_id", "embedding", nCentroids = 8, books)
+    try {
+      Similarity.saveIvfPq(idx, store, "ann")
+      val loaded = Similarity.loadIvfPq(store, "ann")
+      val local = spark.createDataFrame(
+        java.util.Arrays.asList(emb.filter($"vec_id" < 20).collect(): _*), emb.schema)
+      val (rows, jobs) = graft.tools.Probe.jobsDuring(spark)(Similarity.ivfPqSearch(
+        loaded, emb, "vec_id", "embedding", local, "vec_id", "embedding",
+        k = 10, nprobe = 4, shortlist = 50).collect())
+      assert(jobs.nonEmpty, "the census saw no job at all")
+      assert(jobs.size <= 5, s"${jobs.size} jobs: ${jobs.mkString("\n")}")
+      assert(rows.map(_.getLong(0)).distinct.length == 20, rows.toSeq)
+    } finally idx.unpersist()
+  }
 
   test("cosine: identical -> 1, orthogonal -> 0, opposite -> -1") {
     val df = Seq(

@@ -14,6 +14,17 @@ class ProbeSpec extends SparkSpec {
     assert(Probe.jobsDuring(spark)(())._2.isEmpty)
   }
 
+  test("compilesDuring: a new plan compiles classes with their source bytes; the same plan again compiles none") {
+    import org.apache.spark.sql.functions.{col, lit}
+    // a literal no other test uses: primitive literals are inlined in
+    // the generated source, so this projection cannot hit the cache
+    def run() = spark.range(5).select((col("id") * lit(7919013L)).as("x")).collect()
+    val (_, first) = Probe.compilesDuring(spark)(run())
+    assert(first.classes >= 1, first)
+    assert(first.sourceBytes.forall(_ > 0), first)
+    assert(Probe.compilesDuring(spark)(run())._2.classes == 0)
+  }
+
   test("plan shows the physical plan; final-plan shows the adaptive plan after the run") {
     assert(Probe.plan(q01).contains("Physical Plan"))
     assert(Probe.finalPlan(q01).contains("isFinalPlan=true"))
