@@ -4,16 +4,23 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+
+import graft.functions.MinHashSketch
+
 /** Deduplication operators for LLM training-data pipelines (north-star
   * extensions; the reference has none — SURVEY §2.4).
   *
   * Scale design (the 100 TB rule, SURVEY §7.5):
   *  - exact dedup / keep-latest: ONE hash shuffle on the dedup key with
   *    map-side partial aggregation — the canonical scalable shape.
-  *  - MinHash: signatures are computed with k `min()` aggregates in a
-  *    single groupBy (map-side combine; no k× row blowup), then LSH
-  *    banding turns the quadratic candidate problem into an equi-join on
-  *    (band, bandHash) buckets — only same-bucket pairs are compared.
+  *  - MinHash: with xxhash64 a doc's signature and shingle set come
+  *    from one native [[graft.functions.MinHashSketch]] call per doc
+  *    (narrow, no shingle rows); the portable (md5) family computes them
+  *    with k `min()` aggregates in a single groupBy (map-side combine;
+  *    no k× row blowup). LSH banding then turns the quadratic candidate
+  *    problem into an equi-join on (band, bandHash) buckets — only
+  *    same-bucket pairs are compared.
   *  - SimHash: one 64-bit signature per doc via higher-order-function
   *    aggregation (no explode), candidates via 4×16-bit band equality
   *    (Hamming ≤ 3 within 64 bits guarantees a shared band).
@@ -748,44 +755,60 @@ object Dedup {
     TextOps.portableHash64(seed, c)
 
   /** Per-doc MinHash signature columns h0..h{k-1}: min over the doc's
-    * distinct word-n-gram shingles of hash(seed_i, shingle).
-    * Single groupBy with k min() aggregates ⇒ map-side partial agg. */
+    * distinct word-n-gram shingles of hash(seed_i, shingle); docs with
+    * fewer than `shingleN` tokens are absent. The xxhash64 family is one
+    * [[graft.functions.MinHashSketch]] projection (no aggregate); the
+    * portable family is a single groupBy with k min() aggregates. */
   def minhashSignature(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 32, shingleN: Int = 3, portable: Boolean = false): DataFrame =
-    // Hash-spread docs BEFORE the shingle computation (a single input
-    // file otherwise runs it on one core); shingleRows preserves that
-    // partitioning, so the signature groupBy needs no second shuffle.
-    minhashSignatureFromRows(
+    if (portable) portableSignatureFromRows(
       TextOps.shingleRows(docs.repartition(col(idCol)), idCol, textCol, shingleN),
-      idCol, k, portable)
+      idCol, k)
+    else sigColumns(sketchRows(docs, idCol, textCol, k, shingleN), idCol, k)
 
-  /** Signature aggregation over an existing (id, shingle) frame — split
-    * out so [[minhashNearDupsReleasable]] can feed the SAME shingle
-    * pass to both the signatures and the verification sets. min() is
-    * multiplicity-invariant, so no shingle dedup is needed. */
-  private[ext] def minhashSignatureFromRows(sh: DataFrame, idCol: String,
-      k: Int, portable: Boolean): DataFrame = {
-    if (!portable) {
-      val aggs = (0 until k).map(i => min(xxhash64(lit(i), col("shingle"))).as(s"h$i"))
-      sh.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-    } else {
-      // a + i·b stays below 2^62 only while i < 64 — enforce it
-      require(k <= 64, s"portable MinHash supports k <= 64, got $k")
-      // Portable mode: ONE md5 per DISTINCT shingle (vocabulary-level
-      // hashing — the shingle vocabulary is far smaller than the
-      // shingle stream), split into two 56-bit halves (a, b); the k
-      // min-hash functions are the 2-universal family h_i = a + i·b
-      // (no overflow: a, b < 2^56, i < k ≤ 64 ⇒ h_i < 2^62). The
-      // vocab joins back broadcast-style when it fits (AQE decides),
-      // preserving the doc-id partitioning for the signature groupBy.
-      val (ha, hb) = PortableHash.pair56(col("shingle"), 0L)
-      val vocab = sh.select(col("shingle")).distinct()
-        .select(col("shingle"), ha.as("__ha"), hb.as("__hb"))
-      val withH = sh.join(vocab, Seq("shingle"))
-      val aggs = (0 until k).map(i =>
-        min(col("__ha") + lit(i.toLong) * col("__hb")).as(s"h$i"))
-      withH.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-    }
+  /** `(idCol, __sk)`: each doc's [[graft.functions.MinHashSketch]] over
+    * its lowered text; docs below `shingleN` tokens have none and are
+    * dropped. The docs are hash-spread by id first (a single input file
+    * otherwise runs the kernel on one core), and every consumer keyed
+    * on the id rides that partitioning. Doc ids are unique. */
+  private def sketchRows(docs: DataFrame, idCol: String, textCol: String, k: Int,
+      shingleN: Int): DataFrame =
+    // the kernel's own null test, on the token count: a filter on the
+    // kernel's output is pushed below the projection and runs it twice
+    docs.filter(TextOps.tokenCount(col(textCol)) >= shingleN)
+      .repartition(col(idCol)).select(col(idCol),
+        MinHashSketch.column(lower(col(textCol)), k, shingleN).as("__sk"))
+
+  private def sigColumns(sk: DataFrame, idCol: String, k: Int): DataFrame =
+    sk.select(col(idCol) +: (0 until k).map(i => col("__sk.sig").getItem(i).as(s"h$i")): _*)
+
+  private def setColumn(sk: DataFrame, idCol: String): DataFrame =
+    sk.select(col(idCol), col("__sk.shingles").as("__set"))
+
+  /** Portable signature aggregation over an existing (id, shingle)
+    * frame — split out so one shingle pass can feed both the signatures
+    * and the verification sets. min() is multiplicity-invariant, so no
+    * shingle dedup is needed. The xxhash64 family has no such form: it
+    * is the [[graft.functions.MinHashSketch]] kernel ([[sketchRows]]).
+    *
+    * ONE md5 per DISTINCT shingle (vocabulary-level hashing — the
+    * shingle vocabulary is far smaller than the shingle stream), split
+    * into two 56-bit halves (a, b); the k min-hash functions are the
+    * 2-universal family h_i = a + i·b (no overflow: a, b < 2^56,
+    * i < k ≤ 64 ⇒ h_i < 2^62). The vocab joins back broadcast-style
+    * when it fits (AQE decides), preserving the doc-id partitioning for
+    * the signature groupBy. */
+  private def portableSignatureFromRows(sh: DataFrame, idCol: String,
+      k: Int): DataFrame = {
+    // a + i·b stays below 2^62 only while i < 64 — enforce it
+    require(k <= 64, s"portable MinHash supports k <= 64, got $k")
+    val (ha, hb) = PortableHash.pair56(col("shingle"), 0L)
+    val vocab = sh.select(col("shingle")).distinct()
+      .select(col("shingle"), ha.as("__ha"), hb.as("__hb"))
+    val withH = sh.join(vocab, Seq("shingle"))
+    val aggs = (0 until k).map(i =>
+      min(col("__ha") + lit(i.toLong) * col("__hb")).as(s"h$i"))
+    withH.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
 
   /** One (id, band, bandHash) row per band of each signature — the
@@ -866,15 +889,12 @@ object Dedup {
         Seq("__band", "__bh"))
       .select(col("a"), col("b")).distinct()
 
-  /** Per-doc distinct shingle sets. collect_set both dedups shingles
-    * and acts as an Aggregate barrier: the array is materialized once
-    * instead of the shingle expression being re-inlined into every
-    * consumer by projection collapse. Shared by both verify paths so
+  /** Per-doc distinct shingle sets, `(idCol, __set)`: the shingle half
+    * of the sketch kernel (k = 0 hashes). Shared by both verify paths so
     * shingle-set semantics cannot diverge between them. */
   private def shingleSets(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int): DataFrame =
-    TextOps.shingleRows(docs.repartition(col(idCol)), idCol, textCol, shingleN)
-      .groupBy(col(idCol)).agg(collect_set(col("shingle")).as("__set"))
+    setColumn(sketchRows(docs, idCol, textCol, 0, shingleN), idCol)
 
   /** |∩| / |∪| with the empty-union guard — the single definition of
     * verified Jaccard for the in-set and cross-set paths. */
@@ -973,7 +993,7 @@ object Dedup {
         col("__w"), explode(sequence(lit(0L), col("__c") - 1L)).as("__r"))
       .select(col(idCol),
         concat(col("__w"), lit("#"), col("__r").cast("string")).as("shingle"))
-    val sig = minhashSignatureFromRows(ex, idCol, k, portable = true)
+    val sig = portableSignatureFromRows(ex, idCol, k)
     // the candidate pairs feed BOTH the intersection aggregate and the
     // final join, inside the caller's one materializing action —
     // unpersisted, the signature aggregate (k min-hashes over the
@@ -1010,30 +1030,48 @@ object Dedup {
     * xxhash64 for the md5-derived hash (engine-reproducible — the
     * contract query's DuckDB oracle replays the whole pipeline).
     *
-    * ONE tokenize+shingle pass feeds BOTH the signature pipeline and
-    * the verification shingle sets (r7) — at corpus scale the explode
-    * over the token stream is the dominant per-row cost, and composing
-    * `minhashSignature` with `jaccardVerify` pays it twice. The shingle
-    * rows and signatures are persisted behind the returned lazy frame;
-    * the returned [[Owned]] holds both caches. */
+    * ONE per-doc pass feeds BOTH the signatures and the verification
+    * shingle sets. With xxhash64 it is the [[graft.functions.MinHashSketch]]
+    * projection, checkpointed eagerly (two jobs before this returns):
+    * the plan is that frame, the band self-join and the pair join, and
+    * the returned [[Owned]] holds the one checkpoint.
+    * The portable form keeps the composed shingle rows (a window over
+    * posexploded tokens), a k-`min` aggregate and a `collect_set`
+    * aggregate, which the oracle replays; it holds the shingle-row and
+    * signature caches. */
   def minhashNearDupsReleasable(docs: DataFrame, idCol: String,
       textCol: String, threshold: Double = 0.8, k: Int = 32,
       bands: Int = 8, shingleN: Int = 3,
       portable: Boolean = false): Owned = {
-    val sh = TextOps.shingleRows(docs.repartition(col(idCol)), idCol, textCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sig = minhashSignatureFromRows(sh, idCol, k, portable)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (sig, sets, stored) = sigsAndSets(docs, idCol, textCol, k, shingleN, portable)
     val cand = lshCandidates(sig, idCol, k, bands, portable)
-    val sets = sh.groupBy(col(idCol)).agg(collect_set(col("shingle")).as("__set"))
     val result = cand
       .join(sets.withColumnRenamed(idCol, "a").withColumnRenamed("__set", "__sa"), "a")
       .join(sets.withColumnRenamed(idCol, "b").withColumnRenamed("__set", "__sb"), "b")
       .withColumn("jaccard", jaccardCol(col("__sa"), col("__sb")))
       .select(col("a"), col("b"), col("jaccard"))
       .filter(col("jaccard") >= threshold)
-    Owned(result, Seq(sh, sig))
+    Owned(result, stored)
   }
+
+  /** `(signatures, shingle sets, the stored frames to release)`, both
+    * read from one per-doc pass. With xxhash64 that pass is the
+    * [[graft.functions.MinHashSketch]] projection, checkpointed eagerly
+    * (a plan scans it up to four times, and AQE gives each scan of a
+    * cache not yet filled a job of its own). With the portable hash it
+    * is the persisted shingle rows, and the signature aggregate over
+    * them is persisted too: a band self-join reads it on both sides. */
+  private def sigsAndSets(docs: DataFrame, idCol: String, textCol: String, k: Int,
+      shingleN: Int, portable: Boolean): (DataFrame, DataFrame, Seq[DataFrame]) =
+    if (portable) {
+      val sh = TextOps.shingleRows(docs.repartition(col(idCol)), idCol, textCol, shingleN)
+        .persist(MEMORY_AND_DISK)
+      val sig = portableSignatureFromRows(sh, idCol, k).persist(MEMORY_AND_DISK)
+      (sig, sh.groupBy(col(idCol)).agg(collect_set(col("shingle")).as("__set")), Seq(sh, sig))
+    } else {
+      val sk = sketchRows(docs, idCol, textCol, k, shingleN).localCheckpoint(eager = true)
+      (sigColumns(sk, idCol, k), setColumn(sk, idCol), Seq(sk))
+    }
 
   /** Incremental NEAR-dup: which arriving batch docs are near-duplicates
     * (Jaccard ≥ threshold) of the EXISTING corpus — the LSH analogue of
@@ -1049,8 +1087,8 @@ object Dedup {
     * (small) batch plus a banded equi-join in which the batch side's
     * band rows broadcast (AQE decides). Never all-pairs: a batch doc
     * meets only corpus docs sharing a band bucket. The returned
-    * [[Owned]] holds the batch-shingle cache and the candidate
-    * checkpoint (see [[incrementalNearDupsWithSigsReleasable]]). */
+    * [[Owned]] holds the batch's stored per-doc frames and the
+    * candidate checkpoint (see [[incrementalNearDupsWithSigsReleasable]]). */
   def incrementalNearDups(batch: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, threshold: Double = 0.8,
       k: Int = 32, bands: Int = 8, shingleN: Int = 3,
@@ -1065,8 +1103,8 @@ object Dedup {
     * wires it into foreachBatch). The per-batch cost is one batch
     * shingle pass + the banded cross-set join + candidate-restricted
     * corpus re-shingling for exact verification. The returned
-    * [[Owned]] holds the epoch's batch-shingle cache and candidate
-    * checkpoint: an ingest LOOP calls `release()` once per epoch, after
+    * [[Owned]] holds the epoch's batch's stored per-doc frames (as in
+    * [[minhashNearDupsReleasable]]) and candidate checkpoint: an ingest LOOP calls `release()` once per epoch, after
     * the epoch's result is materialized — without it a long-running
     * stream accumulates cache entries per micro-batch forever. */
   def incrementalNearDupsWithSigsReleasable(batch: DataFrame,
@@ -1074,18 +1112,14 @@ object Dedup {
       textCol: String, threshold: Double = 0.8, k: Int = 32,
       bands: Int = 8, shingleN: Int = 3,
       portable: Boolean = false): Owned = {
-    // The BATCH side shares one shingle pass between its signatures
-    // and its verification sets (the minhashNearDupsReleasable r7
-    // recipe — the batch is the small arriving set, so persisting its
-    // shingle rows is cheap and saves a full tokenize+explode). The CORPUS side
-    // deliberately does NOT: persisting the 100 TB corpus' exploded
-    // shingle rows to save re-shingling the candidate SLIVER would be
-    // a catastrophic trade — it keeps the signature pass + candidate-
-    // restricted re-shingle split.
-    val shB = TextOps.shingleRows(
-      batch.repartition(col(idCol)), idCol, textCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bs = minhashSignatureFromRows(shB, idCol, k, portable)
+    // The BATCH side shares one per-doc pass between its signatures
+    // and its verification sets (the minhashNearDupsReleasable recipe —
+    // the batch is the small arriving set, so storing it is cheap and
+    // saves a second tokenize). The CORPUS side deliberately does NOT:
+    // persisting the 100 TB corpus' shingles to save re-shingling the
+    // candidate SLIVER would be a catastrophic trade — it keeps the
+    // signature pass + candidate-restricted re-shingle split.
+    val (bs, batchSets, batchStored) = sigsAndSets(batch, idCol, textCol, k, shingleN, portable)
     val cs = corpusSigs
     // eager checkpoint: verification consumes the candidate frame three
     // times (two id semi-joins + the pair join); without cutting the
@@ -1096,9 +1130,7 @@ object Dedup {
     // wait for GC).
     val cand = lshCandidatesAcross(bs, cs, idCol, k, bands, portable)
       .localCheckpoint(true)
-    val setsA = shB
-      .join(cand.select(col("a").as(idCol)).distinct(), Seq(idCol), "left_semi")
-      .groupBy(col(idCol)).agg(collect_set(col("shingle")).as("__set"))
+    val setsA = batchSets.join(cand.select(col("a").as(idCol)).distinct(), Seq(idCol), "left_semi")
       .withColumnRenamed(idCol, "a").withColumnRenamed("__set", "__sa")
     val setsB = shingleSets(
       corpus.join(cand.select(col("b").as(idCol)).distinct(), Seq(idCol), "left_semi"),
@@ -1110,7 +1142,7 @@ object Dedup {
       .withColumn("jaccard", jaccardCol(col("__sa"), col("__sb")))
       .select(col("a"), col("b"), col("jaccard"))
       .filter(col("jaccard") >= threshold)
-    Owned(result, Seq(shB, cand))
+    Owned(result, batchStored :+ cand)
   }
 
   /** Cross-set exact-Jaccard verification: candidates carry (a = id in
@@ -1297,17 +1329,15 @@ object Dedup {
     * audit of an LSH deployment: run on a sample, check the estimator
     * is calibrated before trusting bands at corpus scale.
     *
-    * ONE tokenize+shingle pass feeds signatures AND exact verification
-    * (the [[minhashNearDupsReleasable]] sharing rule); match counting is k
-    * codegen'd comparisons, each Jaccard one integer division. */
+    * ONE per-doc pass feeds signatures AND exact verification, stored
+    * as in [[minhashNearDupsReleasable]] (the sketch checkpoint with
+    * xxhash64, the shingle-row and signature caches with the portable
+    * hash); match counting is k codegen'd comparisons, each Jaccard one
+    * integer division. */
   def minhashCalibration(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 16, bands: Int = 4, shingleN: Int = 3,
       portable: Boolean = false): DataFrame = {
-    val sh = TextOps.shingleRows(
-      docs.repartition(col(idCol)), idCol, textCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sig = minhashSignatureFromRows(sh, idCol, k, portable)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (sig, sets, _) = sigsAndSets(docs, idCol, textCol, k, shingleN, portable)
     val cand = lshCandidates(sig, idCol, k, bands, portable)
     val left = sig.select(
       col(idCol).as("a") +: (0 until k).map(i => col(s"h$i").as(s"__a$i")): _*)
@@ -1315,7 +1345,6 @@ object Dedup {
       col(idCol).as("b") +: (0 until k).map(i => col(s"h$i").as(s"__b$i")): _*)
     val nMatch = (0 until k).map(i =>
       when(col(s"__a$i") === col(s"__b$i"), 1L).otherwise(0L)).reduce(_ + _)
-    val sets = sh.groupBy(col(idCol)).agg(collect_set(col("shingle")).as("__set"))
     cand
       .join(left, "a").join(right, "b")
       .select(col("a"), col("b"), nMatch.as("n_match"))
@@ -1973,13 +2002,15 @@ object Dedup {
     * standard eval methodology — an uncapped shared-shingle join over
     * a full crawl corpus is exactly the explosion the production
     * pipelines df-gate away). Candidates = [[lshCandidates]] over the
-    * same signatures. ONE tokenize+shingle pass feeds truth AND
-    * signatures (the minhashNearDupsReleasable sharing rule). Returns ONE row:
+    * operator's signatures: with the portable hash they aggregate the
+    * truth's shingle rows (one tokenize+shingle pass feeds both), with
+    * xxhash64 they are [[minhashSignature]]'s kernel projection over
+    * the same sample. Returns ONE row:
     * (n_truth, n_candidates, n_hit, recall_ppm, precision_ppm) —
     * floor ppm; NULL when the respective denominator is 0.
     *
     * Scale shape (on the sample): shingle self-join for truth,
-    * signature aggregate + band join for candidates, one (a, b)
+    * signatures + band join for candidates, one (a, b)
     * equi-join between the two pair sets, one counting reduction.
     * Cache note (the minhashCalibration rule): the shared shingle
     * frame persists for the call and is session-owned — sweep
@@ -2042,7 +2073,11 @@ object Dedup {
       .join(sets.withColumnRenamed(idCol, "b").withColumnRenamed("__set", "__sb"), "b")
       .filter(jaccardCol(col("__sa"), col("__sb")) >= threshold)
       .select(col("a"), col("b"))
-    val sig = minhashSignatureFromRows(sh, idCol, k, portable)
+    // the shingle rows serve the exact truth; the signatures are the
+    // operator's own, as minhashSignature computes them
+    val sig =
+      if (portable) portableSignatureFromRows(sh, idCol, k)
+      else minhashSignature(evalDocs, idCol, textCol, k, shingleN)
     val cand = lshCandidates(sig, idCol, k, bands, portable)
     val t = truth.withColumn("__t", lit(1L))
     val c = cand.withColumn("__c", lit(1L))

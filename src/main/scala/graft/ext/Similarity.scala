@@ -594,13 +594,20 @@ object Similarity {
     val qv = l2Normalize(col(qVecCol).cast("array<double>"))
     val table = AdcTable.column(qv, ivfPqKernel(queries.sparkSession, Nil, Some(books)))
     val q = queries.select(col(qIdCol).as("query_id"), table.as("__T"))
-    val adc = (0 until books.m)
-      .map(j => element_at(element_at(col("__T"), j + 1),
-        element_at(col("codes"), j + 1) + 1))
-      .reduce(_ + _)
-    val scored = encoded.crossJoin(broadcast(q)).withColumn("adc", adc)
+    val scored = encoded.crossJoin(broadcast(q)).withColumn("adc", adcSum(books.m))
     topKPerQuery(scored, col(idCol), col("adc"), "adc", k)
   }
+
+  /** The ADC of `codes` against the table `__T`: `element_at(T_j,
+    * codes[j] + 1)` summed over the m subspaces. Without ANSI a code of
+    * `Int.MaxValue` wraps its index to `Int.MinValue`, which
+    * `element_at`'s bounds check misses (it reads outside the array);
+    * that index reads null here, as any out-of-range index does. Under
+    * ANSI the `+ 1` fails first. */
+  private[ext] def adcSum(m: Int): Column = (0 until m)
+    .map(j => element_at(element_at(col("__T"), j + 1),
+      nullif(element_at(col("codes"), j + 1) + 1, lit(Int.MinValue))))
+    .reduce(_ + _)
 
   /** PQ search with exact RERANK (the production IVF-PQ recipe): ADC
     * produces a `shortlist`-sized candidate set per query (cheap — m

@@ -4,20 +4,31 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.{TextSignals, TextSignalsConsts}
+
 /** Text-analysis operators for LLM training-data pipelines (north-star
   * extensions per SURVEY §2.4; the reference itself has no text ops).
   *
-  * Everything here is built from `org.apache.spark.sql.functions` —
-  * codegen'd Catalyst expressions, no UDFs — so the whole pipeline stays
-  * inside WholeStageCodegen and scales linearly with input: language-ID,
-  * quality scoring, token counting, fingerprinting are all narrow
-  * (per-row) transformations with zero shuffles.
+  * Nothing here is a UDF. The per-document signals a curation pass
+  * reads together — [[normalize]], [[gopherQuality]], [[qualityScore]],
+  * [[langId]] — are fields of one native expression,
+  * [[graft.functions.TextSignals]], which a projection evaluates once
+  * per row however many of them it selects. The rest is built from
+  * `org.apache.spark.sql.functions` (codegen'd Catalyst expressions).
+  * Every per-row operator is a narrow transformation with zero
+  * shuffles.
   */
 object TextOps {
 
-  /** Canonical text normalization: lowercase, collapse whitespace. */
-  def normalize(c: Column): Column =
-    regexp_replace(lower(trim(c)), "\\s+", " ")
+  /** The [[graft.functions.TextSignals]] struct of `c` with the default
+    * word lists; `lists` replaces the language-ID lists. */
+  private def signals(c: Column, lists: Map[String, Seq[String]] = LangStopwords): Column =
+    TextSignals.column(c, TextSignalsConsts(EnglishStopwords, GopherRequiredWords,
+      lists.toSeq.sortBy(_._1)))
+
+  /** Canonical text normalization: lowercase, trim spaces, collapse
+    * whitespace — `regexp_replace(lower(trim(c)), "\\s+", " ")`. */
+  def normalize(c: Column): Column = signals(c).getField("norm")
 
   /** Word tokens: lowercase, split on non-alphanumerics, drop empties. */
   def tokens(c: Column): Column =
@@ -83,16 +94,11 @@ object TextOps {
   }
 
   /** Composite quality score in [0,1]: length band + stopword presence −
-    * punctuation excess. Deterministic, order-independent. All counting
-    * via the codegen'd regex twins (value-identical to the token-array
-    * formulation the DuckDB oracle uses). */
-  def qualityScore(text: Column): Column = {
-    val lenScore = least(length(text).cast("double") / lit(500.0), lit(1.0))
-    val stopScore = least(stopwordRatioText(text) * lit(4.0), lit(1.0))
-    val punctPenalty = least(punctRatio(text) * lit(2.0), lit(1.0))
-    greatest(lit(0.0), least(lit(1.0),
-      lenScore * lit(0.5) + stopScore * lit(0.5) - punctPenalty * lit(0.25)))
-  }
+    * punctuation excess, `greatest(0, least(1, len·0.5 + stop·0.5 −
+    * punct·0.25))` over `least(length / 500, 1)`, `least(4 ·`
+    * [[stopwordRatioText]]`, 1)` and `least(2 ·` [[punctRatio]]`, 1)`.
+    * Deterministic, order-independent. */
+  def qualityScore(text: Column): Column = signals(text).getField("quality")
 
   /** Tiny per-language function-word lists for the n-gram/stopword
     * language-ID heuristic. Real pipelines plug in bigger lists; the
@@ -103,17 +109,12 @@ object TextOps {
     "de" -> Seq("der", "die", "und", "das", "ist", "von", "mit", "den", "ein", "zu"),
     "fr" -> Seq("le", "la", "et", "les", "des", "un", "une", "du", "est", "dans"))
 
-  /** Language-ID: per-language stopword hit ratio, argmax (ties broken
-    * by language code, deterministic). Returns the language code, or
-    * "und" when nothing matches. One codegen'd regex pass per language
-    * instead of an interpreted lambda filter per language. */
-  def langId(text: Column, lists: Map[String, Seq[String]] = LangStopwords): Column = {
-    val scored = lists.toSeq.sortBy(_._1).map { case (lang, stops) =>
-      struct(stopwordRatioText(text, stops).as("score"), lit(lang).as("lang"))
-    }
-    val best = array_max(array(scored: _*))
-    when(best.getField("score") > 0, best.getField("lang")).otherwise(lit("und"))
-  }
+  /** Language-ID: per-language stopword hit ratio ([[stopwordRatioText]]
+    * of each list), argmax, ties to the later language code. Returns
+    * the language code, or "und" when nothing matches. Each list must
+    * be non-empty and hold `[a-z0-9]+` words only. */
+  def langId(text: Column, lists: Map[String, Seq[String]] = LangStopwords): Column =
+    signals(text, lists).getField("lang")
 
   /** Seeded 60-bit ENGINE-PORTABLE hash: first 15 hex chars of
     * md5("seed|value") — reproducible in DuckDB/Postgres, unlike
@@ -175,79 +176,31 @@ object TextOps {
   // MassiveText document-quality heuristics (Rae et al. 2021, "Scaling
   // Language Models: Methods, Analysis & Insights from Training
   // Gopher", appendix A1.1) — the rule set most LLM curation pipelines
-  // start from. Every counter is codegen'd regex/length arithmetic over
-  // the raw text (no token arrays, no UDFs, zero shuffles); the DuckDB
+  // start from. Every counter is one field of the TextSignals pass
+  // over the raw text (no token arrays, zero shuffles); the DuckDB
   // oracle replays each with `regexp_extract_all`/list lambdas.
-
-  /** Mean token length: alphanumeric chars / token count (0 if empty). */
-  def meanWordLength(c: Column): Column = {
-    val n = tokenCount(c)
-    when(n === 0, lit(0.0)).otherwise(
-      length(regexp_replace(lower(c), "[^a-z0-9]", "")).cast("double") /
-        n.cast("double"))
-  }
-
-  /** Symbol-to-word ratio: '#' and ellipsis occurrences per token
-    * (Gopher drops docs above 0.1). */
-  def symbolToWordRatio(c: Column): Column = {
-    val n = tokenCount(c)
-    when(n === 0, lit(0.0)).otherwise(
-      (regexp_count(c, lit("#")) + regexp_count(c, lit("\\.\\.\\.|…")))
-        .cast("double") / n.cast("double"))
-  }
-
-  /** Fraction of lines starting with a bullet mark. */
-  def bulletLineRatio(c: Column): Column =
-    regexp_count(c, lit("(?m)^[-*•]")).cast("double") /
-      (regexp_count(c, lit("\n")) + 1).cast("double")
-
-  /** Fraction of lines ending in an ellipsis. */
-  def ellipsisLineRatio(c: Column): Column =
-    regexp_count(c, lit("(?m)(\\.\\.\\.|…)$")).cast("double") /
-      (regexp_count(c, lit("\n")) + 1).cast("double")
-
-  /** Fraction of tokens containing at least one alphabetic character.
-    * The boundary-guarded pattern matches each token at most once
-    * (leading digits allowed), so the count equals filtering the token
-    * array for `contains [a-z]` — without building the array. */
-  def alphaWordRatio(c: Column): Column = {
-    val n = tokenCount(c)
-    when(n === 0, lit(0.0)).otherwise(
-      regexp_count(lower(c), lit("(?<![a-z0-9])[0-9]*[a-z][a-z0-9]*"))
-        .cast("double") / n.cast("double"))
-  }
 
   /** Gopher's "required word" list: a doc must contain ≥2 distinct. */
   val GopherRequiredWords: Seq[String] =
     Seq("the", "be", "to", "of", "and", "that", "have", "with")
 
-  /** How many DISTINCT required words appear (presence, not count). */
-  def requiredWordHits(c: Column,
-      words: Seq[String] = GopherRequiredWords): Column =
-    words.map(w => when(
-        regexp_count(lower(c), lit(s"(?<![a-z0-9])$w(?![a-z0-9])")) > 0, 1L)
-      .otherwise(0L)).reduce(_ + _)
-
   /** All Gopher rule metrics plus the composite pass flag, as one
     * struct (thresholds per the paper: 50 ≤ words ≤ 100k, 3 ≤ mean
     * word length ≤ 10, symbol ratio ≤ 0.1, ≤90% bullet lines, ≤30%
-    * ellipsis lines, ≥80% alphabetic words, ≥2 required words). */
-  def gopherQuality(c: Column): Column = {
-    val wc = tokenCount(c)
-    val mwl = meanWordLength(c)
-    val swr = symbolToWordRatio(c)
-    val blr = bulletLineRatio(c)
-    val elr = ellipsisLineRatio(c)
-    val awr = alphaWordRatio(c)
-    val rwh = requiredWordHits(c)
-    struct(wc.as("word_count"), mwl.as("mean_word_len"),
-      swr.as("symbol_ratio"), blr.as("bullet_ratio"),
-      elr.as("ellipsis_ratio"), awr.as("alpha_ratio"),
-      rwh.as("required_hits"),
-      (wc >= 50 && wc <= 100000 && mwl >= 3.0 && mwl <= 10.0 &&
-        swr <= 0.1 && blr <= 0.9 && elr <= 0.3 && awr >= 0.8 && rwh >= 2)
-        .cast("long").as("pass"))
-  }
+    * ellipsis lines, ≥80% alphabetic words, ≥2 required words):
+    *  - `word_count`: tokens, maximal `[a-z0-9]+` runs of `lower(c)`;
+    *  - `mean_word_len`: their characters per token (0 if none);
+    *  - `symbol_ratio`: '#' plus "..." (non-overlapping) plus '…', per
+    *    token;
+    *  - `bullet_ratio`: lines starting with '-', '*' or '•' (a line
+    *    starts after \n, \r, U+0085, U+2028 or U+2029) over the \n
+    *    count + 1;
+    *  - `ellipsis_ratio`: line ends right after "..." or '…', over the
+    *    same count;
+    *  - `alpha_ratio`: tokens holding a letter, per token;
+    *  - `required_hits`: required words present as tokens;
+    *  - `pass`: 1 when every rule holds, else 0. */
+  def gopherQuality(c: Column): Column = signals(c).getField("gopher")
 
   // ------------------------------ hashed-feature linear classifier
   // fastText/CCNet-style quality filtering (Joulin et al. 2016; Wenzek

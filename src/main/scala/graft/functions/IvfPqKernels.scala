@@ -3,9 +3,7 @@ package graft.functions
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.expressions.{ElementAt, Expression, Literal}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MathUtils}
 import org.apache.spark.sql.graft.Bridge
@@ -171,58 +169,21 @@ object IvfPqConsts {
   }
 }
 
-/** A row's inputs in, one call into a broadcast constants object out:
-  * the one shape of every kernel in this file.
-  *
-  * The constants ride in ONE Spark [[Broadcast]]: the task binary
-  * carries only its handle, and each task fetches the value once, so
-  * production-sized centroid matrices, codebooks and query batches
-  * never enter the plan as literals (nor as m·ksub literal expressions
-  * the optimizer and code generator walk on every plan). The generated
-  * code calls the same method as `eval`, so both paths agree bit for
-  * bit: a child of primitive type passes as `(isNull, value)`, any
-  * other as its value or null. */
-sealed abstract class BroadcastKernel extends Expression {
+/** A [[NativeKernel]] whose constants ride in ONE Spark [[Broadcast]]:
+  * the task binary carries only its handle, and each task fetches the
+  * value once, so production-sized centroid matrices, codebooks and
+  * query batches never enter the plan as literals (nor as m·ksub
+  * literal expressions the optimizer and code generator walk on every
+  * plan). */
+sealed abstract class BroadcastKernel extends NativeKernel {
   def consts: Broadcast[_ <: AnyRef]
-  protected def constsClass: Class[_]
-  /** The constants' method this kernel calls. */
-  protected def method: String
-  /** The children's types; an array matches whatever its nullability. */
-  protected def inputTypes: Seq[DataType]
-  /** `eval`'s call of [[method]] on the children's values. */
-  protected def call(args: Seq[Any]): Any
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def erase(t: DataType): DataType = t match {
-      case ArrayType(e, _) => ArrayType(erase(e))
-      case other => other
-    }
-    if (children.map(c => erase(c.dataType)) == inputTypes.map(erase))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (${inputTypes.map(_.sql).mkString(", ")}) arguments, " +
-        s"got (${children.map(_.dataType.sql).mkString(", ")})")
-  }
-  override def nullable: Boolean = false
-
-  override def eval(input: InternalRow): Any = call(children.map(_.eval(input)))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  override protected def constsRef(ctx: CodegenContext): String = {
     val cls = constsClass.getName
     val handle = ctx.addReferenceObj("kernelConsts", consts)
     // fetched once per generated instance (per task), not per row
-    val k = ctx.addMutableState(cls, "kernelConsts",
+    ctx.addMutableState(cls, "kernelConsts",
       v => s"$v = ($cls) $handle.value();", forceInline = true)
-    val ins = children.map(_.genCode(ctx))
-    val args = children.zip(ins).map { case (c, in) =>
-      if (CodeGenerator.isPrimitiveType(c.dataType)) s"${in.isNull}, ${in.value}"
-      else s"${in.isNull} ? null : ${in.value}"
-    }
-    ev.copy(code = code"""
-      |${ins.map(_.code).reduce(_ + _)}
-      |${CodeGenerator.javaType(dataType)} ${ev.value} =
-      |  $k.$method(${args.mkString(", ")});
-      """.stripMargin, isNull = FalseLiteral)
   }
 }
 

@@ -56,25 +56,29 @@ object Probe {
   }
 
   /** Janino compiles while a body ran: how many classes, and their
-    * generated source bytes when known exactly (None once the process
-    * has compiled more classes than the metric's reservoir keeps). */
-  final case class Compiles(classes: Long, sourceBytes: Option[Long])
+    * generated source bytes and compile milliseconds when known exactly
+    * (None once the process has compiled more classes than the metric's
+    * reservoir keeps). */
+  final case class Compiles(classes: Long, sourceBytes: Option[Long], compileMs: Option[Long])
 
   /** The classes compiled while `body` runs, read from Spark's
-    * `CodegenMetrics` source-size histogram (one sample per Janino
-    * compile). The metric is this JVM's, so the session must be local:
-    * a cluster's executors compile in their own JVMs. Source bytes are
-    * the growth of the histogram's sample sum, exact while the
-    * reservoir still holds every sample of the process. */
+    * `CodegenMetrics` histograms (one sample per Janino compile: its
+    * source size, and its compile time in whole ms). The metric is this
+    * JVM's, so the session must be local: a cluster's executors compile
+    * in their own JVMs. Bytes and ms are the growth of each histogram's
+    * sample sum, exact while the reservoir still holds every sample of
+    * the process. */
   def compilesDuring[T](spark: SparkSession)(body: => T): (T, Compiles) = {
     require(spark.sparkContext.isLocal,
       "compilesDuring reads this JVM's CodegenMetrics; a cluster session compiles on executors")
     val size = CodegenMetrics.METRIC_SOURCE_CODE_SIZE
-    def sum: Long = size.getSnapshot.getValues.sum
-    val (n0, b0) = (size.getCount, sum)
+    val time = CodegenMetrics.METRIC_COMPILATION_TIME
+    def sums: (Long, Long) = (size.getSnapshot.getValues.sum, time.getSnapshot.getValues.sum)
+    val (n0, (b0, ms0)) = (size.getCount, sums)
     val out = body
-    val (n1, b1) = (size.getCount, sum)
-    (out, Compiles(n1 - n0, Option.when(n1 <= ReservoirSize)(b1 - b0)))
+    val (n1, (b1, ms1)) = (size.getCount, sums)
+    val exact = n1 <= ReservoirSize
+    (out, Compiles(n1 - n0, Option.when(exact)(b1 - b0), Option.when(exact)(ms1 - ms0)))
   }
 
   /** Samples a Dropwizard `ExponentiallyDecayingReservoir` keeps. */
@@ -102,7 +106,8 @@ object Probe {
         val ((_, js), cg) = compilesDuring(spark)(jobsDuring(spark)(noop(fn(spark, sfDir))))
         println(f"[jobs] $name: ${js.size} jobs, ${(System.nanoTime() - t0) / 1e9}%.2f s wall, " +
           f"${js.map(_.ms).sum} ms summed job time, ${cg.classes} classes compiled " +
-          s"(${cg.sourceBytes.fold("?")(_.toString)} source bytes)")
+          s"(${cg.sourceBytes.fold("?")(_.toString)} source bytes, " +
+          s"${cg.compileMs.fold("?")(_.toString)} ms)")
         js.foreach(j => println(f"[jobs]   job ${j.id}%4d ${j.ms}%7d ms  ${j.stage} [${j.tasks} tasks]"))
         spark.catalog.clearCache()
       }

@@ -62,7 +62,12 @@ class PlanShapeSpec extends SparkSpec {
     val sig = graft.ext.Dedup.minhashSignature(
       core.Fx.t(spark, sfDir, "documents"), "doc_id", "text", k = 8)
     val p = plan(sig)
+    // one sketch kernel per doc over the id spread: no window stitching
+    // shingle rows, no aggregate over them
+    assert(p.contains("graft_minhash_sketch"), p)
     assert("(?m)^\\(\\d+\\) Exchange".r.findAllIn(p).size == 1, p)
+    Seq("Window", "Aggregate", "Generate").foreach(op =>
+      assert(!p.contains(op), s"signature plan must not $op: $p"))
   }
 
   test("native graft_dot participates in whole-stage codegen") {

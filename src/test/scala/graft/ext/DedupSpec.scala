@@ -975,19 +975,23 @@ class DedupSpec extends SparkSpec {
       (4L, "one two three four five six eight"),       // high overlap
       (5L, "completely different words entirely here"),
       (6L, "nothing shared with anything else at all"))
-    val out = Dedup.lshRecallAudit(docs.toDF("id", "text"), "id", "text",
-      threshold = 0.5, k = 16, bands = 4, shingleN = 3, portable = true)
-      .collect().head
-    val nTruth = out.getAs[Long]("n_truth")
-    val nCand = out.getAs[Long]("n_candidates")
-    val nHit = out.getAs[Long]("n_hit")
-    assert(nTruth >= 1L)          // (1,2) is J = 1 by construction
-    assert(nHit <= nTruth && nHit <= nCand)
-    assert(out.getAs[Long]("recall_ppm") == nHit * 1000000L / nTruth)
-    assert(out.getAs[Long]("precision_ppm") == nHit * 1000000L / nCand)
-    // identical docs share every band: (1,2) must be a candidate AND a
-    // hit, so recall is strictly positive
-    assert(nHit >= 1L)
+    // both hash families: md5-portable (the oracle's) and xxhash64 (the
+    // sketch kernel's signatures)
+    Seq(true, false).foreach { portable =>
+      val out = Dedup.lshRecallAudit(docs.toDF("id", "text"), "id", "text",
+        threshold = 0.5, k = 16, bands = 4, shingleN = 3, portable = portable)
+        .collect().head
+      val nTruth = out.getAs[Long]("n_truth")
+      val nCand = out.getAs[Long]("n_candidates")
+      val nHit = out.getAs[Long]("n_hit")
+      assert(nTruth >= 1L)          // (1,2) is J = 1 by construction
+      assert(nHit <= nTruth && nHit <= nCand)
+      assert(out.getAs[Long]("recall_ppm") == nHit * 1000000L / nTruth)
+      assert(out.getAs[Long]("precision_ppm") == nHit * 1000000L / nCand)
+      // identical docs share every band: (1,2) must be a candidate AND a
+      // hit, so recall is strictly positive
+      assert(nHit >= 1L, s"portable = $portable")
+    }
   }
 
   test("lshRecallAudit: the enforced doc budget refuses oversized input by name") {

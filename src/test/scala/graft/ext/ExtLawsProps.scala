@@ -23,6 +23,50 @@ object ExtLawsProps extends Properties("graft.ext") {
     langs <- Gen.listOfN(n, Gen.oneOf("en", "es", "de"))
   } yield toks.zip(langs).zipWithIndex.map { case ((t, l), i) => (i.toLong, t, l) }
 
+  // Curation kernels vs the composed forms they replaced: text over an
+  // alphabet of the traps — every line terminator Java's (?m) reads,
+  // the ellipsis, bullet and punctuation marks, Unicode case mappings
+  // (Kelvin sign, dotted capital I), a surrogate pair, digits — and the
+  // kernels' own word lists, so stopword ratios and languages vary.
+  private val genPiece: Gen[String] = Gen.frequency(
+    6 -> Gen.oneOf((TextOps.EnglishStopwords ++ TextOps.LangStopwords.values.flatten ++
+      TextOps.GopherRequiredWords).distinct),
+    3 -> Gen.oneOf("study", "Result", "x9", "42", "ab1c", "THE", "Der", "dAs"),
+    6 -> Gen.oneOf(" ", " ", "  "),
+    5 -> Gen.oneOf("…", "•", "#", ".", "...", ",", "!", "?", ";", ":", "-", "*", "\r", "\n",
+      "\r\n", "\t", "\u000B", "\u0085", "\u2028", "\u2029", "\u212A", "\u0130", "0", "7",
+      "\ud83d\ude00"))
+  private val genTexts: Gen[List[String]] = Gen.chooseNum(1, 10).flatMap(n => Gen.listOfN(n,
+    Gen.frequency(1 -> Gen.const(null), 1 -> Gen.const(""),
+      12 -> Gen.chooseNum(1, 200).flatMap(Gen.listOfN(_, genPiece).map(_.mkString)))))
+
+  private def textFrame(texts: List[String]) =
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "t").repartition(2)
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  property("TextSignals == the composed regex forms, codegen and interpreted") =
+    Prop.forAll(genTexts) { texts =>
+      val df = textFrame(texts)
+      val t = col("t")
+      val expected = sortedRows(df.select(col("id"), TextOpsSpec.normalize(t),
+        TextOpsSpec.gopherQuality(t), TextOpsSpec.qualityScore(t), TextOpsSpec.langId(t)))
+      Seq(true, false).forall(codegen => TextOpsSpec.withCodegen(spark, codegen)(
+        sortedRows(df.select(col("id"), TextOps.normalize(t), TextOps.gopherQuality(t),
+          TextOps.qualityScore(t), TextOps.langId(t))) == expected))
+    }
+
+  property("MinHashSketch == shingleRows + min(xxhash64) + collect_set, codegen and interpreted") =
+    Prop.forAll(genTexts, Gen.chooseNum(1, 3), Gen.chooseNum(1, 6)) { (texts, n, k) =>
+      val df = textFrame(texts)
+      val expected = sortedRows(TextOpsSpec.minhashSketch(df, "id", "t", k, n))
+      Seq(true, false).forall(codegen => TextOpsSpec.withCodegen(spark, codegen)(
+        sortedRows(df.select(col("id"),
+            graft.functions.MinHashSketch.column(lower(col("t")), k, n).as("s"))
+          .filter(col("s").isNotNull).select(col("id"), col("s.sig"), col("s.shingles"))) == expected))
+    }
+
   // Sequence packing: within every partition key, (1) bins are filled in
   // id order with contiguous ids 0..maxBin, (2) every bin except possibly
   // the last STARTED below maxTokens (the straddle rule: a bin closes

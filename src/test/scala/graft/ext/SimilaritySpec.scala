@@ -38,11 +38,6 @@ class SimilaritySpec extends SparkSpec {
       col("nn_id"), col("cosine"), "cosine", k)
   }
 
-  private def adcSum(m: Int) = (0 until m)
-    .map(j => element_at(element_at(col("__T"), j + 1),
-      element_at(col("codes"), j + 1) + 1))
-    .reduce(_ + _)
-
   private def composedIvfPqSearch(index: Similarity.IvfPqIndex, corpus: DataFrame,
       idCol: String, vecCol: String, queries: DataFrame, qIdCol: String,
       qVecCol: String, k: Int, nprobe: Int, shortlist: Int): DataFrame = {
@@ -53,7 +48,7 @@ class SimilaritySpec extends SparkSpec {
     val probes = composedProbes(q, index.centroids, nprobe)
       .select(col("query_id"), col("centroid_id"), table.as("__T"))
     val scored = index.encoded.join(broadcast(probes), Seq("centroid_id"))
-      .withColumn("__adc", adcSum(books.m))
+      .withColumn("__adc", Similarity.adcSum(books.m))
     val cand = Similarity.topKPerQuery(scored, col("__id"), col("__adc"), "__adc", shortlist)
       .select(col("query_id"), col("nn_id"))
     composedRerank(cand, q, corpus, idCol, vecCol, k)
@@ -109,8 +104,9 @@ class SimilaritySpec extends SparkSpec {
     Array(Array(1.0, 0.0), Array(0.0, 1.0), Array(1.0, 0.0)),
     Array(Array(0.0, 0.0), Array(-1.0, 0.5), Array(0.5, 0.5))))
   // fail element_at or + 1 under ANSI; without ANSI, 14's index wraps
-  // to Int.MinValue, which element_at reads out of bounds with (the
-  // kernel reads null), and 17's index 0 fails in both modes
+  // to Int.MinValue, which both forms read as null (element_at itself
+  // would read out of bounds with it), and 17's index 0 fails in both
+  // modes
   private val ansiErrors = Map(10L -> "INVALID_ARRAY_INDEX_IN_ELEMENT_AT",
     12L -> "INVALID_ARRAY_INDEX_IN_ELEMENT_AT", 14L -> "ARITHMETIC_OVERFLOW",
     17L -> "INVALID_INDEX_OF_ZERO")
@@ -182,12 +178,36 @@ class SimilaritySpec extends SparkSpec {
     for (codegen <- Seq(true, false)) {
       val conf = if (codegen) Nil else interpreted
       withConf(conf :+ ("spark.sql.ansi.enabled" -> "false"): _*) {
-        compare(indexWithout(Seq(14L, 17L)))
+        compare(indexWithout(Seq(17L)))
         failures(ansiErrors.filter(_._1 == 17L))
       }
       withConf(conf :+ ("spark.sql.ansi.enabled" -> "true"): _*) {
         compare(ansiSafeIndex)
         failures(ansiErrors)
+      }
+    }
+  }
+
+  test("pqSearch on a stored code of Int.MaxValue: the row's ADC reads null without ANSI, ARITHMETIC_OVERFLOW under ANSI") {
+    // id 14 carries codes (Int.MaxValue, 0): without ANSI the lookup
+    // index wraps to Int.MinValue, which element_at's own bounds check
+    // misses (a read outside the array, a SIGSEGV in the JVM)
+    val enc = synthEncoded.filter(col("__id").isin(1L, 14L))
+    val q = vecFrame(Seq(100L -> full(1, 0, 0, 0)))
+    def search() = Similarity.pqSearch(enc, "__id", synthBooks, q, "id", "vec", k = 2)
+    for (codegen <- Seq(true, false)) {
+      val conf = if (codegen) Nil else interpreted
+      withConf(conf :+ ("spark.sql.ansi.enabled" -> "false"): _*) {
+        val scored = enc.crossJoin(q.select(AdcTable.column(Similarity.l2Normalize(col("vec")),
+            spark.sparkContext.broadcast(IvfPqConsts(Nil, synthBooks.books,
+              synthBooks.halfNormSq, synthBooks.ds))).as("__T")))
+          .select(col("__id"), Similarity.adcSum(synthBooks.m).as("adc"))
+          .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+        assert(scored(14L).isEmpty && scored(1L).isDefined, scored)
+        assert(search().collect().map(_.getLong(1)).toSeq == Seq(1L))
+      }
+      withConf(conf :+ ("spark.sql.ansi.enabled" -> "true"): _*) {
+        assert(conditions(search().collect()).contains("ARITHMETIC_OVERFLOW"))
       }
     }
   }

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 class TextOpsSpec extends SparkSpec {
@@ -243,12 +244,13 @@ class TextOpsSpec extends SparkSpec {
 
   test("gopher metrics: bullets, ellipses, symbols, alpha words, required words") {
     val t = "- one two...\n* three# 42\ntail…"
-    val row = one(t).select(
-      TextOps.tokenCount($"t"), TextOps.meanWordLength($"t"),
-      TextOps.symbolToWordRatio($"t"), TextOps.bulletLineRatio($"t"),
-      TextOps.ellipsisLineRatio($"t"), TextOps.alphaWordRatio($"t"),
-      TextOps.requiredWordHits($"t"))
+    def metrics(g: org.apache.spark.sql.Column) = one(t).select(
+      g.getField("word_count"), g.getField("mean_word_len"), g.getField("symbol_ratio"),
+      g.getField("bullet_ratio"), g.getField("ellipsis_ratio"), g.getField("alpha_ratio"),
+      g.getField("required_hits"))
       .as[(Long, Double, Double, Double, Double, Double, Long)].first()
+    val row = metrics(TextOps.gopherQuality($"t"))
+    assert(row == metrics(TextOpsSpec.gopherQuality($"t")))
     // tokens: one, two, three, 42, tail → 5; alnum chars 17
     assert(row._1 == 5L)
     assert(row._2 == 17.0 / 5.0)
@@ -260,6 +262,55 @@ class TextOpsSpec extends SparkSpec {
     // '42' has no letter → 4/5
     assert(row._6 == 4.0 / 5.0)
     assert(row._7 == 0L)
+  }
+
+  test("TextSignals == the composed forms on the regex traps, codegen and interpreted") {
+    val texts = Seq[String](null, "", " ", "  \t a \u000B b \f\r\n c  ", "ab....\n", "....",
+      "x...\r\ny…", "…\u2029…\u2028...\u0085..", "a\r\n- b\r* c\u0085• d\u2028-e\u2029*f",
+      "-\n\n*\r\n•", "#...#……....", "a,b.c!d?e;f:g", "\u212A \u0130stanbul K\u0130 ki",
+      "😀 emoji 𝔘 text", "THE And OF the the", "el la de que y en un", "der die und das ist",
+      "le la et les des", "Der, Die! und? das: the; of", "1a 2 3b c4 55 x9y",
+      Iterator.continually("the study of that careful result has appeared with detail")
+        .take(12).mkString(" "))
+    // not a local relation: the optimizer would evaluate the projection itself
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "t").repartition(2)
+    def cols(sig: Boolean) = {
+      val t = $"t"
+      if (sig) Seq(TextOps.normalize(t), TextOps.gopherQuality(t), TextOps.qualityScore(t),
+        TextOps.langId(t), TextOps.langId(t, Map("en" -> Seq("the"), "xx" -> Seq("of", "the"))))
+      else Seq(TextOpsSpec.normalize(t), TextOpsSpec.gopherQuality(t), TextOpsSpec.qualityScore(t),
+        TextOpsSpec.langId(t), TextOpsSpec.langId(t, Map("en" -> Seq("the"), "xx" -> Seq("of", "the"))))
+    }
+    def rows(sig: Boolean) = df.select($"id" +: cols(sig): _*).collect().map(_.toString).sorted.toSeq
+    val expected = rows(sig = false)
+    assert(expected.exists(_.contains(",1]")), "some doc must pass the Gopher gate")
+    for (codegen <- Seq(true, false))
+      TextOpsSpec.withCodegen(spark, codegen)(assert(rows(sig = true) == expected, s"codegen=$codegen"))
+    // one kernel call serves every signal column of a projection: one
+    // per word-list set
+    val q = df.select(cols(sig = true): _*)
+    q.collect()
+    val code = org.apache.spark.sql.execution.debug.codegenString(q.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    })
+    assert("\\.signals\\(".r.findAllIn(code).size == 2, code)
+  }
+
+  test("MinHashSketch == shingleRows + min(xxhash64) + collect_set; short and empty docs are absent") {
+    val texts = Seq[String](null, "", "a b", "A b C", "a  b\tc\nd", "x y x y x y",
+      "K\u212A k İi 1 2 3", "one, two; three... four — five", "😀 a 😀 b 😀 c")
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "t").repartition(2)
+    for (n <- Seq(1, 3); k <- Seq(1, 5)) {
+      val expected = TextOpsSpec.minhashSketch(df, "id", "t", k, n)
+        .collect().map(_.toString).sorted.toSeq
+      for (codegen <- Seq(true, false)) TextOpsSpec.withCodegen(spark, codegen) {
+        val got = df.select($"id", graft.functions.MinHashSketch.column(lower($"t"), k, n).as("s"))
+          .filter($"s".isNotNull).select($"id", $"s.sig", $"s.shingles")
+          .collect().map(_.toString).sorted.toSeq
+        assert(got == expected, s"n=$n k=$k codegen=$codegen")
+      }
+    }
   }
 
   test("gopherQuality pass flag: long prose passes, a bullet list and an empty doc fail") {
@@ -616,4 +667,97 @@ class TextOpsSpec extends SparkSpec {
     assert(out(4L).isNullAt(out(4L).fieldIndex("vote_label")))
     assert(out(4L).isNullAt(out(4L).fieldIndex("vote_conf_ppm")))
   }
+}
+
+/** The composed Spark-function forms that [[graft.functions.TextSignals]]
+  * and [[graft.functions.MinHashSketch]] replaced: the references the
+  * kernels must equal bit for bit. */
+object TextOpsSpec {
+  def normalize(c: Column): Column = regexp_replace(lower(trim(c)), "\\s+", " ")
+
+  def qualityScore(text: Column): Column = {
+    val lenScore = least(length(text).cast("double") / lit(500.0), lit(1.0))
+    val stopScore = least(TextOps.stopwordRatioText(text) * lit(4.0), lit(1.0))
+    val punctPenalty = least(TextOps.punctRatio(text) * lit(2.0), lit(1.0))
+    greatest(lit(0.0), least(lit(1.0),
+      lenScore * lit(0.5) + stopScore * lit(0.5) - punctPenalty * lit(0.25)))
+  }
+
+  def langId(text: Column, lists: Map[String, Seq[String]] = TextOps.LangStopwords): Column = {
+    val scored = lists.toSeq.sortBy(_._1).map { case (lang, stops) =>
+      struct(TextOps.stopwordRatioText(text, stops).as("score"), lit(lang).as("lang"))
+    }
+    val best = array_max(array(scored: _*))
+    when(best.getField("score") > 0, best.getField("lang")).otherwise(lit("und"))
+  }
+
+  def meanWordLength(c: Column): Column = {
+    val n = TextOps.tokenCount(c)
+    when(n === 0, lit(0.0)).otherwise(
+      length(regexp_replace(lower(c), "[^a-z0-9]", "")).cast("double") / n.cast("double"))
+  }
+
+  def symbolToWordRatio(c: Column): Column = {
+    val n = TextOps.tokenCount(c)
+    when(n === 0, lit(0.0)).otherwise(
+      (regexp_count(c, lit("#")) + regexp_count(c, lit("\\.\\.\\.|…")))
+        .cast("double") / n.cast("double"))
+  }
+
+  def bulletLineRatio(c: Column): Column =
+    regexp_count(c, lit("(?m)^[-*•]")).cast("double") /
+      (regexp_count(c, lit("\n")) + 1).cast("double")
+
+  def ellipsisLineRatio(c: Column): Column =
+    regexp_count(c, lit("(?m)(\\.\\.\\.|…)$")).cast("double") /
+      (regexp_count(c, lit("\n")) + 1).cast("double")
+
+  def alphaWordRatio(c: Column): Column = {
+    val n = TextOps.tokenCount(c)
+    when(n === 0, lit(0.0)).otherwise(
+      regexp_count(lower(c), lit("(?<![a-z0-9])[0-9]*[a-z][a-z0-9]*"))
+        .cast("double") / n.cast("double"))
+  }
+
+  def requiredWordHits(c: Column, words: Seq[String] = TextOps.GopherRequiredWords): Column =
+    words.map(w => when(
+        regexp_count(lower(c), lit(s"(?<![a-z0-9])$w(?![a-z0-9])")) > 0, 1L)
+      .otherwise(0L)).reduce(_ + _)
+
+  def gopherQuality(c: Column): Column = {
+    val wc = TextOps.tokenCount(c)
+    val mwl = meanWordLength(c)
+    val swr = symbolToWordRatio(c)
+    val blr = bulletLineRatio(c)
+    val elr = ellipsisLineRatio(c)
+    val awr = alphaWordRatio(c)
+    val rwh = requiredWordHits(c)
+    struct(wc.as("word_count"), mwl.as("mean_word_len"),
+      swr.as("symbol_ratio"), blr.as("bullet_ratio"),
+      elr.as("ellipsis_ratio"), awr.as("alpha_ratio"),
+      rwh.as("required_hits"),
+      (wc >= 50 && wc <= 100000 && mwl >= 3.0 && mwl <= 10.0 &&
+        swr <= 0.1 && blr <= 0.9 && elr <= 0.3 && awr >= 0.8 && rwh >= 2)
+        .cast("long").as("pass"))
+  }
+
+  /** (idCol, sig, shingles): k `min(xxhash64(i, shingle))` over the
+    * window-stitched shingle rows and their sorted `collect_set`. */
+  def minhashSketch(docs: DataFrame, idCol: String, textCol: String, k: Int,
+      n: Int): DataFrame =
+    TextOps.shingleRows(docs.repartition(col(idCol)), idCol, textCol, n)
+      .groupBy(col(idCol)).agg(
+        array((0 until k).map(i => min(xxhash64(lit(i), col("shingle")))): _*).as("sig"),
+        array_sort(collect_set(col("shingle"))).as("shingles"))
+
+  /** Runs `body` with whole-stage codegen and the codegen expression
+    * factory on, or with both off (interpreted evaluation). */
+  def withCodegen[T](spark: SparkSession, codegen: Boolean)(body: => T): T =
+    if (codegen) body
+    else {
+      val kvs = Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+      try { kvs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
+      finally kvs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
 }

@@ -22,7 +22,9 @@ class ProbeSpec extends SparkSpec {
     val (_, first) = Probe.compilesDuring(spark)(run())
     assert(first.classes >= 1, first)
     assert(first.sourceBytes.forall(_ > 0), first)
-    assert(Probe.compilesDuring(spark)(run())._2.classes == 0)
+    assert(first.compileMs.forall(_ >= 0), first)
+    val again = Probe.compilesDuring(spark)(run())._2
+    assert(again.classes == 0 && again.sourceBytes.forall(_ == 0) && again.compileMs.forall(_ == 0), again)
   }
 
   test("plan shows the physical plan; final-plan shows the adaptive plan after the run") {

@@ -4,7 +4,8 @@
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 
 For each query dumped by graft.Verify: load <out>/<name> parquet, run the
-oracle SQL from oracle_sql.json against DuckDB views over <sfDir>/*.parquet,
+oracle SQL from oracle_sql.json against DuckDB views over <sfDir>/*.parquet
+(each table one parquet file or a directory of part files),
 and compare row count, column names/types, and a canonical value hash
 (columns sorted by name, rows sorted, values normalized).
 
@@ -21,7 +22,7 @@ A query passes only if BOTH paths match; if the paths DISAGREE with each
 other, the query is flagged HARNESS-DIVERGENCE — a representation riding
 the hash that a third harness could legitimately read differently.
 """
-import sys, json, glob, hashlib
+import os, sys, json, glob, hashlib
 from decimal import Decimal
 import duckdb
 import pandas as pd
@@ -72,7 +73,12 @@ def canon_arrow(tbl) -> str:
 def main(sf_dir, out_dir):
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        path = f"{sf_dir}/{t}.parquet"
+        # a fixture table is one parquet file, or (tools.Scale10x) a
+        # Spark output directory of part files
+        if os.path.isdir(path):
+            path += "/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     results = {}
     for name in sorted(oracle):
@@ -103,7 +109,6 @@ def main(sf_dir, out_dir):
                 stat.append("hash mismatch")
         results[name] = "OK rows=%d" % len(mine) if not stat else "FAIL: " + "; ".join(stat)
     # queries with no oracle
-    import os
     for d in sorted(glob.glob(f"{out_dir}/q*")):
         name = os.path.basename(d)
         if name not in oracle and os.path.isdir(d):
